@@ -1836,10 +1836,6 @@ def _stream_store_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares the batch oracle verbatim, proving exactly-once apply. State
     held by the query is zero (foreachBatch is stateless; the store IS the
     state)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from educational_vector_database_spark.sources import store as S
 
     store_dir = _reap_scratch("evdb_stream_merge_")
@@ -1861,18 +1857,11 @@ def _stream_store_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = mods.unionByName(news)
 
     def apply_batch(bdf, batch_id: int) -> None:
+        # the store is never absent: a crash mid-swap leaves it at .old,
+        # and a retried or next batch heals it back before reading
+        S.heal(store_dir)
         cur = bdf.sparkSession.read.parquet(store_dir)
-        merged = S.upsert(cur, bdf, key="doc_id")
-        staging = f"{store_dir}_stage_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        # Rename-aside swap: the store is never absent. A crash between the
-        # two renames leaves the old store recoverable at .bak (rmtree-then-
-        # rename would leave NO store and break foreachBatch retry); a crash
-        # after leaves the new store live and the .bak cleanup idempotent.
-        backup = f"{store_dir}_bak_{batch_id}"
-        os.rename(store_dir, backup)
-        os.rename(staging, store_dir)
-        shutil.rmtree(backup)
+        S.swap_dir(store_dir, S.upsert(cur, bdf, key="doc_id").write.parquet)
 
     with _stream_shuffle_scaled(spark, sf_dir, "events", "documents"):
         q = (
@@ -6543,7 +6532,7 @@ def _knn_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound = math.ceil(n / 6)
     idx.rebalance(bound)
     sizes = idx.cell_sizes()
-    _LIVE_PERSISTS.append(idx._assigned)
+    _LIVE_PERSISTS.append(idx._frame)
     qv = _query_vector(spark, sf_dir, vec_id=INC_QUERY_ID)
     # the index was built/split in THIS function: fresh by construction, so
     # skip ensure()'s count + content-fingerprint jobs (assume_fresh contract)
@@ -6597,7 +6586,7 @@ def _knn_ivf_disk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spuriously on empty cells (round-6 ADVICE item)
     populated = sorted(
         int(r.centroid_id)
-        for r in loaded._assigned.select("centroid_id").distinct().collect()
+        for r in loaded._frame.select("centroid_id").distinct().collect()
     )
     known = {cid for cid, _ in loaded._centroids}
     layout_ok = (
@@ -8049,7 +8038,7 @@ def _knn_ivfpq_disk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     populated = sorted(
         int(r.centroid_id)
-        for r in loaded._codes.select("centroid_id").distinct().collect()
+        for r in loaded._frame.select("centroid_id").distinct().collect()
     )
     layout_ok = (
         dirs == populated

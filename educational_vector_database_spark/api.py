@@ -24,8 +24,20 @@ from . import rag as ragmod
 from .embeddings import Embeddings
 from .functions import vector as V
 from .operators import knn as K
+from .operators.ann import GraphIndex, IVFIndex, TwoLevelGraphIndex
+from .operators.pq import IVFPQIndex
 from .sources import store as storemod
 from .sources.store import StoreConfig
+
+#: index_type -> (index class, subdir of the saved store holding it). The
+#: underscore prefix makes Spark's parquet reader skip the subdir, so the
+#: store stays readable as a plain table.
+INDEXES = {
+    "ivf": (IVFIndex, "_ivf_index"),
+    "graph": (GraphIndex, "_graph_index"),
+    "ivfpq": (IVFPQIndex, "_ivfpq_index"),
+    "two_level": (TwoLevelGraphIndex, "_two_level_index"),
+}
 
 
 class VectorDB:
@@ -51,7 +63,7 @@ class VectorDB:
     ):
         if metric.lower() not in V.SUPPORTED_METRICS:
             raise ValueError(f"Unknown metric: {metric!r}")
-        if index_type not in ("ivf", "graph", "ivfpq", "two_level", "auto"):
+        if index_type not in (*INDEXES, "auto"):
             raise ValueError(
                 f"Unknown index_type: {index_type!r} "
                 "(ivf|graph|ivfpq|two_level|auto)"
@@ -83,10 +95,9 @@ class VectorDB:
         # to re-learn a corpus size nothing changed)
         self._auto_n: int | None = None
         self._auto_rows_dirty = True
-        self._ivf = None
-        self._graph = None
-        self._ivfpq = None
-        self._two_level = None
+        # the one live index (the class INDEXES maps the serving type to),
+        # created and maintained lazily by the search path
+        self._index = None
         self._n_cells = n_cells
         self._df = df if df is not None else spark.createDataFrame(
             [], f"{id_col} bigint, {vector_col} array<double>, text string"
@@ -213,96 +224,56 @@ class VectorDB:
         self._auto = rec
         if rec["index_type"] == "ivf":
             new_cells = rec["params"]["n_cells"]
-            if new_cells != self._n_cells and self._ivf is not None:
+            if new_cells != self._n_cells and isinstance(self._index, IVFIndex):
                 # ensure() folds appends in with FROZEN centroids, so a
                 # re-sized K would silently never apply — drop the stale
                 # index; the next search rebuilds at the new K ~ sqrt(n)
-                self._ivf = None
+                self._index = None
             self._n_cells = new_cells
         if prev is not None and prev["index_type"] != rec["index_type"]:
             # verdict flipped regimes: the old serving structure is for a
             # corpus shape that no longer exists
-            self._ivf = self._graph = self._ivfpq = self._two_level = None
+            self._index = None
         return rec["index_type"]
+
+    def _live_index(self, itype: str):
+        """The index serving ``itype``, created on first use and brought up
+        to date with the corpus: ensure() embeds the reference's lazy
+        contract — the SEARCH pays the rebuild or the exact append fold-in
+        (ref api.py:42-62), never the write."""
+        cls = INDEXES[itype][0]
+        if type(self._index) is not cls:
+            kw = {"n_cells": self._n_cells} if itype in ("ivf", "ivfpq") else {}
+            self._index = cls(metric=self.metric, vector_col=self.vector_col,
+                              id_col=self.id_col, **kw)
+        return self._index.ensure(self._df)
+
+    def _nprobe(self) -> int:
+        """Cells probed on the ivf route: the auto router's recommendation,
+        else 1."""
+        if self._auto is not None and self.index_type == "auto":
+            return self._auto["params"].get("nprobe", 1)
+        return 1
 
     def search_vector(self, query_vector: Sequence[float], k: int = 5) -> DataFrame:
         extra = [c for c in self._df.columns if c not in (self.id_col, self.vector_col)]
         itype = self._effective_index_type() if self.use_approx else self.index_type
-        if self.use_approx and itype == "graph":
-            from .operators.ann import GraphIndex
-
-            if self._graph is None:
-                self._graph = GraphIndex(
-                    metric=self.metric, vector_col=self.vector_col,
-                    id_col=self.id_col,
-                )
-            self._graph.ensure(self._df)  # lazy rebuild / exact fold-in
-            res = self._graph.query(
-                self._df, query_vector, k=k, assume_fresh=True
+        if not self.use_approx or itype == "brute":
+            # exact kNN (also the auto verdict for small isotropic corpora:
+            # exact IS the fastest serving there)
+            return K.knn(
+                self._df, query_vector, k=k, metric=self.metric,
+                vector_col=self.vector_col, id_col=self.id_col, extra_cols=extra,
             )
-            if extra:
-                res = res.join(
-                    self._df.select(self.id_col, *extra), self.id_col, "left"
-                ).orderBy(F.desc("score"), F.asc(self.id_col))
-            return res
-        if self.use_approx and itype == "two_level":
-            from .operators.ann import TwoLevelGraphIndex
-
-            if self._two_level is None:
-                self._two_level = TwoLevelGraphIndex(
-                    metric=self.metric, vector_col=self.vector_col,
-                    id_col=self.id_col,
-                )
-            self._two_level.ensure(self._df)  # per-layer fold-in / rebuild
-            res = self._two_level.query(
-                self._df, query_vector, k=k, assume_fresh=True
-            )
-            if extra:
-                res = res.join(
-                    self._df.select(self.id_col, *extra), self.id_col, "left"
-                ).orderBy(F.desc("score"), F.asc(self.id_col))
-            return res
-        if self.use_approx and itype == "ivfpq":
-            from .operators.pq import IVFPQIndex
-
-            if self._ivfpq is None:
-                self._ivfpq = IVFPQIndex(
-                    n_cells=self._n_cells, metric=self.metric,
-                    vector_col=self.vector_col, id_col=self.id_col,
-                )
-            self._ivfpq.ensure(self._df)  # lazy rebuild / one-sided append
-            res = self._ivfpq.query(
-                self._df, query_vector, k=k, assume_fresh=True
-            )
-            if extra:
-                res = res.join(
-                    self._df.select(self.id_col, *extra), self.id_col, "left"
-                ).orderBy(F.desc("score"), F.asc(self.id_col))
-            return res
-        if self.use_approx and itype == "ivf":
-            from .operators.ann import IVFIndex
-
-            if self._ivf is None:
-                self._ivf = IVFIndex(
-                    n_cells=self._n_cells, metric=self.metric,
-                    vector_col=self.vector_col, id_col=self.id_col,
-                )
-            # ensure() embeds the reference's lazy-rebuild contract: appends
-            # since the last build make the index stale; the SEARCH pays the
-            # rebuild (ref api.py:42-62), not the write.
-            self._ivf.ensure(self._df)
-            nprobe = (
-                self._auto["params"].get("nprobe", 1)
-                if self._auto is not None and self.index_type == "auto"
-                else 1
-            )
-            return self._ivf.query(self._df, query_vector, k=k, nprobe=nprobe)
-        # itype == "brute": the auto verdict for small isotropic corpora —
-        # exact kNN IS the fastest serving there, nothing approximate to buy
-        return K.knn(
-            self._df, query_vector, k=k, metric=self.metric,
-            vector_col=self.vector_col, id_col=self.id_col, extra_cols=extra,
+        kw = {"nprobe": self._nprobe()} if itype == "ivf" else {}
+        res = self._live_index(itype).query(
+            self._df, query_vector, k=k, assume_fresh=True, **kw
         )
+        if extra:
+            res = res.join(
+                self._df.select(self.id_col, *extra), self.id_col, "left"
+            ).orderBy(F.desc("score"), F.asc(self.id_col))
+        return res
 
     def search_text(self, query: str, k: int = 5) -> DataFrame:
         if self.embeddings is None:
@@ -375,54 +346,19 @@ class VectorDB:
         if not self.use_approx or itype == "brute":
             approx = exact
             itype = "brute"
-        elif itype == "ivf":
-            from .operators.ann import IVFIndex
-
-            if self._ivf is None:
-                self._ivf = IVFIndex(
-                    n_cells=self._n_cells, metric=self.metric,
-                    vector_col=self.vector_col, id_col=self.id_col,
-                )
-            self._ivf.ensure(self._df)
-            if nprobe is None:
-                nprobe = (
-                    self._auto["params"].get("nprobe", 1)
-                    if self._auto is not None and self.index_type == "auto"
-                    else 1
-                )
-            approx = self._ivf.query_batch(
-                self._df, queries, k=k, nprobe=nprobe, assume_fresh=True
-            )
-        elif itype == "graph":
-            from .operators.ann import GraphIndex
-
-            if self._graph is None:
-                self._graph = GraphIndex(
-                    metric=self.metric, vector_col=self.vector_col,
-                    id_col=self.id_col,
-                )
-            self._graph.ensure(self._df)
-            approx = self._graph.query_batch(
-                self._df, queries, k=k, assume_fresh=True
-            )
-        elif itype == "two_level":
-            from .operators.ann import TwoLevelGraphIndex
-
-            if self._two_level is None:
-                self._two_level = TwoLevelGraphIndex(
-                    metric=self.metric, vector_col=self.vector_col,
-                    id_col=self.id_col,
-                )
-            self._two_level.ensure(self._df)
-            approx = self._two_level.query_batch(
-                self._df, queries, k=k, assume_fresh=True
-            )
-        else:
+        elif itype == "ivfpq":
             raise ValueError(
                 f"certify: unsupported index_type {itype!r} — certify "
                 "covers the auto router's routes (brute|ivf|two_level) "
                 "plus graph; PQ ranking quality is measured by the "
                 "knn_pq_recall/knn_ivfpq evals"
+            )
+        else:
+            kw = {}
+            if itype == "ivf":
+                kw["nprobe"] = nprobe if nprobe is not None else self._nprobe()
+            approx = self._live_index(itype).query_batch(
+                self._df, queries, k=k, assume_fresh=True, **kw
             )
         return recall_certificate(
             exact, approx, itype, k,
@@ -481,45 +417,52 @@ class VectorDB:
         """Reference contract (api.py:174-189): the store + the use_ann FLAG
         persist; the reference drops the index itself and lazily rebuilds on
         first search after load. Going one better where it costs nothing: a
-        BUILT IVF index also persists, as a cell-partitioned parquet table
-        under ``<path>/_ivf_index`` — the underscore prefix makes Spark's
-        parquet reader skip the subdir, so the store stays readable as a
-        plain table; a reloaded DB then skips the first-search rebuild
-        (staleness is still re-checked there, so a store whose rows changed
-        after the index was saved rebuilds exactly as the reference would).
+        BUILT index also persists, under ``<path>/<INDEXES subdir>``; a
+        reloaded DB then skips the first-search rebuild (staleness is still
+        re-checked there, so a store whose rows changed after the index was
+        saved folds in or rebuilds exactly as the reference would).
         ``store.compact()`` rewrites the table directory without the index
-        subdir — the next search falls back to the lazy rebuild."""
+        subdir — the next search falls back to the lazy rebuild.
+
+        ``mode="overwrite"`` stages the store AND the index and swaps them
+        in as one directory (:func:`~.sources.store.swap_dir`), so saving
+        back over the path the DB was loaded from — the reference server's
+        load-once, save-per-request loop — is safe. Afterwards the DB reads
+        the store it saved, and an index that read the old files reads the
+        new ones."""
+        cfg = StoreConfig(
+            dim=self.dim, metric=self.metric, use_approx=self.use_approx,
+            embeddings_class=type(self.embeddings).__name__ if self.embeddings else None,
+            id_col=self.id_col, vector_col=self.vector_col,
+            index_type=self.index_type,
+        )
+        idx = self._index if self._index is not None and self._index.built else None
+        sub = next((d for c, d in INDEXES.values() if type(idx) is c), None)
+
+        def write(d: str) -> None:
+            storemod.write_store(self._df, d, cfg, mode)
+            if idx is not None:
+                idx.save(os.path.join(d, sub))
+
         with self._dim_errors():
-            storemod.save(
-                self._df, path,
-                StoreConfig(
-                    dim=self.dim, metric=self.metric, use_approx=self.use_approx,
-                    embeddings_class=type(self.embeddings).__name__ if self.embeddings else None,
-                    id_col=self.id_col, vector_col=self.vector_col,
-                    index_type=self.index_type,
-                ),
-                mode=mode,
-            )
-            if self._ivf is not None and self._ivf._assigned is not None:
-                self._ivf.save(os.path.join(path, "_ivf_index"))
-            if self._graph is not None and self._graph._edges is not None:
-                self._graph.save(os.path.join(path, "_graph_index"))
-            if self._ivfpq is not None and self._ivfpq._codes is not None:
-                self._ivfpq.save(os.path.join(path, "_ivfpq_index"))
-            if (
-                self._two_level is not None
-                and self._two_level.lower._edges is not None
-            ):
-                self._two_level.save(os.path.join(path, "_two_level_index"))
+            if mode != "overwrite":
+                write(path)
+                return
+            moved = idx is not None and idx._reads(os.path.join(path, sub))
+            storemod.swap_dir(path, write)
+            # (the known schema spares the read a schema-inference job)
+            self._df = self.spark.read.schema(self._df.schema).parquet(path)
+            if moved:
+                idx._attach(self.spark, os.path.join(path, sub))
 
     @classmethod
     def load(
         cls, spark: SparkSession, path: str, embeddings: Embeddings | None = None
     ) -> "VectorDB":
         """Caller re-supplies the embeddings object, exactly the reference
-        contract (api.py:191-205; README.md:160-163). A saved index under
-        ``<path>/_ivf_index`` is reopened (partition-pruned disk probes, no
-        rebuild); absent or unreadable, the lazy-rebuild path applies."""
+        contract (api.py:191-205; README.md:160-163). A saved index of the
+        configured type is reopened (disk-served, no rebuild); absent or
+        unreadable, the lazy-rebuild path applies."""
         df, cfg = storemod.load(spark, path)
         # The serving family is part of the persisted config (a DB
         # constructed with index_type="graph" but saved before any search
@@ -528,12 +471,11 @@ class VectorDB:
         # with the historical precedence (ivfpq > graph > ivf).
         index_type = cfg.index_type
         if index_type is None:
-            if os.path.isdir(os.path.join(path, "_ivfpq_index")):
-                index_type = "ivfpq"
-            elif os.path.isdir(os.path.join(path, "_graph_index")):
-                index_type = "graph"
-            else:
-                index_type = "ivf"
+            index_type = next(
+                (t for t in ("ivfpq", "graph")
+                 if os.path.isdir(os.path.join(path, INDEXES[t][1]))),
+                "ivf",
+            )
         db = cls(
             spark, dim=cfg.dim, metric=cfg.metric, embeddings=embeddings,
             df=df, id_col=cfg.id_col, vector_col=cfg.vector_col,
@@ -542,42 +484,13 @@ class VectorDB:
         # Only the saved index matching the configured type is attached; a
         # stray dir from another family can no longer override serving
         # behavior across a save/load roundtrip.
-        idx_dir = os.path.join(path, "_ivf_index")
-        if cfg.use_approx and index_type == "ivf" and os.path.isdir(idx_dir):
-            from .operators.ann import IVFIndex
-
-            try:
-                db._ivf = IVFIndex.load(spark, idx_dir)
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                # corrupt/truncated sidecar or partial index dir: fall back
-                # to the lazy-rebuild path exactly as when the dir is absent
-                db._ivf = None
-        gidx_dir = os.path.join(path, "_graph_index")
-        if cfg.use_approx and index_type == "graph" and os.path.isdir(gidx_dir):
-            from .operators.ann import GraphIndex
-
-            try:
-                db._graph = GraphIndex.load(spark, gidx_dir)
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                db._graph = None  # same lazy-rebuild fallback as IVF
-        tidx_dir = os.path.join(path, "_two_level_index")
-        if (
-            cfg.use_approx
-            and index_type == "two_level"
-            and os.path.isdir(tidx_dir)
-        ):
-            from .operators.ann import TwoLevelGraphIndex
-
-            try:
-                db._two_level = TwoLevelGraphIndex.load(spark, tidx_dir)
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                db._two_level = None  # same lazy-rebuild fallback
-        pidx_dir = os.path.join(path, "_ivfpq_index")
-        if cfg.use_approx and index_type == "ivfpq" and os.path.isdir(pidx_dir):
-            from .operators.pq import IVFPQIndex
-
-            try:
-                db._ivfpq = IVFPQIndex.load(spark, pidx_dir)
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                db._ivfpq = None  # same lazy-rebuild fallback
+        if cfg.use_approx and index_type in INDEXES:
+            icls, sub = INDEXES[index_type]
+            if os.path.isdir(os.path.join(path, sub)):
+                try:
+                    db._index = icls.load(spark, os.path.join(path, sub))
+                except (OSError, json.JSONDecodeError, KeyError, ValueError):
+                    # corrupt/truncated sidecar or partial index dir: fall
+                    # back to the lazy-rebuild path as when the dir is absent
+                    db._index = None
         return db

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..sources.store import heal, swap_dir
 from . import knn as K
 
 LSH_SEED = 42
@@ -46,10 +47,17 @@ def corpus_fingerprint(
     Composable: fp(A ∪ B) == fp(A) ^ fp(B) for disjoint A, B — which lets
     an index update its stored fingerprint after a pure-append fold-in
     without re-scanning the kept corpus."""
+    return corpus_census(df, id_col, vector_col)[1]
+
+
+def corpus_census(
+    df: DataFrame, id_col: str = "vec_id", vector_col: str = "embedding"
+) -> tuple[int, int]:
+    """``(row count, corpus_fingerprint)`` from the same one aggregate job."""
     row = df.select(
         F.xxhash64(F.col(id_col), F.col(vector_col)).alias("_h")
-    ).agg(F.expr("bit_xor(_h)").alias("h")).collect()[0]
-    return int(row.h) if row.h is not None else 0
+    ).agg(F.count("*").alias("n"), F.expr("bit_xor(_h)").alias("h")).collect()[0]
+    return int(row.n), int(row.h) if row.h is not None else 0
 
 
 def estimate_corpus_rows(
@@ -919,22 +927,223 @@ def recall_certificate(
     )
 
 
-class IVFIndex:
-    """Cached batch IVF index with LAZY rebuild and explicit invalidation —
-    the Spark analog of the reference's ANN orchestration (ref api.py:42-62
-    ``_maybe_init_ann``: rebuild when the indexed size no longer matches the
-    corpus; ref api.py:35 ``ann_index = None`` is the invalidated state).
+class PersistedIndex:
+    """The lifecycle every persisted index shares — the Spark analog of the
+    reference's ANN orchestration (ref api.py:42-79 ``_maybe_init_ann``:
+    rebuild when the indexed size no longer matches the corpus, insert
+    incrementally when the index exists; ref api.py:35 ``ann_index = None``
+    is the invalidated state).
 
-    The "index" is the corpus with a ``centroid_id`` column, persisted
-    (MEMORY_AND_DISK, spills at scale); centroids live driver-side (O(cells)).
-    ``query`` probes the ``nprobe`` nearest cells only — with the assignment
-    cached, a probe scans ~nprobe/n_cells of the corpus and shuffles nothing.
+    The index is ONE persisted frame — the IVF assignment, the graph edge
+    list or the PQ code table — plus driver-side state: the indexed row
+    count, the build-time (id, vector) :func:`corpus_fingerprint` and, once
+    loaded, the path its frame reads. Subclasses supply ``build`` (which
+    ends in :meth:`_install`), :meth:`_fold_in`, the queries and their own
+    sidecar fields; everything below is shared:
 
-    Staleness contract mirrors the reference: the index remembers how many
-    rows it indexed; ``ensure(df)`` rebuilds iff the corpus row count moved
-    (one cheap count() per ensure — the reference's ``get_all()`` equivalent).
-    ``invalidate()`` is the explicit cache-invalidate op: unpersists and
-    drops state, so the next query rebuilds."""
+    - ``ensure(df)`` — fresh (same row count) -> no-op; a PURE APPEND
+      (every indexed id still present with unchanged content, only new ids
+      added) -> :meth:`_fold_in` the delta, O(|delta|); any other drift ->
+      ``build``. The append test is one aggregate over the corpus tagged
+      with the indexed ids: kept-side count, kept-side fingerprint and
+      delta fingerprint together. The kept side is compared against the
+      cached build-time fingerprint, so an in-place vector update combined
+      with an append cannot pass as a pure append. Contract bound (same as
+      the reference's size-only check, src/vectordb/api.py:63-79): a
+      count-preserving in-place rewrite with NO appends is not detected —
+      call :meth:`invalidate` after one. All of it is paid by the SEARCH
+      path, keeping writes zero-job.
+    - :meth:`_swap` — every frame change materializes the new frame
+      before it releases the old one.
+    - ``save``/``load`` — the frame as parquet plus a JSON sidecar,
+      written through :func:`~..sources.store.swap_dir`. Saving back over
+      the path the index was loaded from is safe: a no-op while unmutated,
+      else a staged swap, after which the frame reads the new files.
+      ``load`` heals a torn swap, then serves straight off the table,
+      uncached."""
+
+    SIDECAR: str  # sidecar file name inside the saved directory
+    PARAMS: tuple[str, ...]  # constructor arguments kept in the sidecar
+    PARTITION: str | None = None  # partitionBy column of the saved table
+    # the frame carries the vectors, so its own census is the fingerprint
+    FRAME_HAS_VECTORS = False
+    id_col: str
+    vector_col: str
+
+    def __init__(self):
+        self._frame: DataFrame | None = None
+        self._indexed_rows = -1
+        self._corpus_fp: int | None = None
+        # set by load(); _mutated tracks in-memory drift since then, so a
+        # save() back to the source path knows whether it must rewrite
+        self._source_path: str | None = None
+        self._mutated = False
+
+    # -- hooks ----------------------------------------------------------------
+
+    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
+        """The frame after appending ``delta`` to the indexed ``kept`` rows."""
+        raise NotImplementedError
+
+    def _can_fold(self) -> bool:
+        return True
+
+    def _indexed_ids(self) -> DataFrame:
+        return self._frame.select(self.id_col)
+
+    def _table(self) -> DataFrame:
+        """The frame as written by :meth:`save`."""
+        return self._frame
+
+    def _meta(self) -> dict:
+        return {}
+
+    def _read_meta(self, meta: dict) -> None:
+        pass
+
+    # -- frame state ----------------------------------------------------------
+
+    @property
+    def built(self) -> bool:
+        return self._frame is not None
+
+    def _swap(self, new: DataFrame, materialize=DataFrame.count):
+        """Install ``new`` as the frame. ``materialize(new)`` runs BEFORE
+        the old frame is released, so a new frame derived from the old one
+        (a fold-in union, a rebalance split) never recomputes from a
+        released cache; returns its result."""
+        out = materialize(new) if materialize is not None else None
+        old, self._frame = self._frame, new
+        if old is not None and old is not new:
+            old.unpersist()
+        return out
+
+    def _census(self, df: DataFrame) -> tuple[int, int]:
+        return corpus_census(df, self.id_col, self.vector_col)
+
+    def _install(self, frame: DataFrame, df: DataFrame):
+        """Adopt a frame freshly built from ``df``: the indexed size and
+        the fingerprint come from ONE aggregate — over the frame itself
+        when it carries the vectors (that also materializes it), else over
+        ``df`` after a count materializes the frame."""
+        if self.FRAME_HAS_VECTORS:
+            self._indexed_rows, self._corpus_fp = self._swap(
+                frame, self._census)
+        else:
+            self._swap(frame)
+            self._indexed_rows, self._corpus_fp = self._census(df)
+        self._source_path, self._mutated = None, False
+        return self
+
+    def invalidate(self) -> None:
+        """Explicit cache invalidation: the next ensure()/query() rebuilds."""
+        if self._frame is not None:
+            self._frame.unpersist()
+        PersistedIndex.__init__(self)
+
+    def is_stale(self, df: DataFrame) -> bool:
+        """≙ reference ``ann_index is None or _ann_index_size != n_vectors``."""
+        return self._frame is None or df.count() != self._indexed_rows
+
+    def ensure(self, df: DataFrame):
+        """Lazy maintenance: no-op / append fold-in / rebuild (class doc)."""
+        if self._frame is None or self._indexed_rows <= 0:
+            return self.build(df)
+        n = df.count()
+        if n == self._indexed_rows:
+            return self
+        fp = self._corpus_fp
+        if fp is None and self.FRAME_HAS_VECTORS:
+            fp = self._census(self._frame)[1]  # sidecar predates corpus_fp
+        if self._can_fold() and fp is not None:
+            ids = self._indexed_ids()
+            r = (
+                df.join(ids.withColumn("_kept", F.lit(True)), self.id_col,
+                        "left")
+                .select("_kept", F.xxhash64(F.col(self.id_col),
+                                            F.col(self.vector_col)).alias("_h"))
+                .agg(F.count("_kept").alias("n_kept"),
+                     F.expr("bit_xor(IF(_kept, _h, NULL))").alias("fp_kept"),
+                     F.expr("bit_xor(IF(_kept IS NULL, _h, NULL))")
+                     .alias("fp_delta"))
+                .collect()[0]
+            )
+            if r.n_kept == self._indexed_rows and (r.fp_kept or 0) == fp:
+                self._swap(self._fold_in(
+                    df.join(ids, self.id_col, "left_semi"),
+                    df.join(ids, self.id_col, "left_anti"),
+                ).persist())
+                self._indexed_rows, self._mutated = n, True
+                self._corpus_fp = fp ^ (r.fp_delta or 0)
+                return self
+        return self.build(df)
+
+    # -- disk layout ----------------------------------------------------------
+
+    def _reads(self, path: str) -> bool:
+        return self._source_path is not None and os.path.realpath(
+            path) == os.path.realpath(self._source_path)
+
+    def _attach(self, spark: SparkSession, path: str) -> None:
+        """Serve straight off the saved table at ``path``, uncached."""
+        self._swap(spark.read.parquet(path), materialize=None)
+        self._source_path, self._mutated = path, False
+
+    def _write(self, path: str) -> None:
+        writer = self._table().write
+        if self.PARTITION is not None:
+            writer = writer.partitionBy(self.PARTITION)
+        writer.parquet(path)
+        meta = {p: getattr(self, p) for p in self.PARAMS}
+        meta.update(indexed_rows=self._indexed_rows,
+                    corpus_fp=self._corpus_fp, **self._meta())
+        with open(os.path.join(path, self.SIDECAR), "w", encoding="utf-8") as f:
+            json.dump(meta, f)
+
+    def save(self, path: str):
+        if self._frame is None:
+            raise ValueError("index not built; call build()/ensure() first")
+        over = self._reads(path)
+        if over and not self._mutated:
+            return self  # the files at path already are the saved form
+        swap_dir(path, self._write)
+        if over:
+            self._attach(self._frame.sparkSession, path)
+        return self
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        heal(path)
+        with open(os.path.join(path, cls.SIDECAR), encoding="utf-8") as f:
+            meta = json.load(f)
+        idx = cls(**{p: meta[p] for p in cls.PARAMS if p in meta})
+        idx._read_meta(meta)
+        idx._attach(spark, path)
+        idx._indexed_rows = int(meta["indexed_rows"])
+        idx._corpus_fp = meta.get("corpus_fp")
+        return idx
+
+
+def _cell_sizes(assigned: DataFrame) -> dict[int, int]:
+    rows = assigned.groupBy("centroid_id").count().collect()
+    return {int(r["centroid_id"]): int(r["count"]) for r in rows}
+
+
+class IVFIndex(PersistedIndex):
+    """Cached batch IVF index on the :class:`PersistedIndex` lifecycle.
+
+    The frame is the corpus with a ``centroid_id`` column, persisted
+    (MEMORY_AND_DISK, spills at scale); centroids live driver-side
+    (O(cells)). ``query`` probes the ``nprobe`` nearest cells only — with
+    the assignment cached, a probe scans ~nprobe/n_cells of the corpus and
+    shuffles nothing. A pure append folds in with FROZEN centroids
+    (:meth:`add_items`); :meth:`rebalance` splits the cells that grew
+    hot."""
+
+    SIDECAR = "_ivf_index.json"
+    PARAMS = ("n_cells", "metric", "vector_col", "id_col", "seed")
+    PARTITION = "centroid_id"
+    FRAME_HAS_VECTORS = True
 
     def __init__(
         self,
@@ -944,26 +1153,18 @@ class IVFIndex:
         id_col: str = "vec_id",
         seed: int = LSH_SEED,
     ):
+        super().__init__()
         self.n_cells = n_cells
         self.metric = metric
         self.vector_col = vector_col
         self.id_col = id_col
         self.seed = seed
-        self._assigned: DataFrame | None = None
         self._centroids: list[tuple[int, list[float]]] | None = None
-        self._indexed_rows = -1
-        # disk-backed state: set by load(); _mutated tracks in-memory drift
-        # (add_items/rebalance) so save() back to the source path knows
-        # whether it is a no-op or needs the staging swap
-        self._source_path: str | None = None
-        self._mutated = False
 
-    # -- build / invalidate (≙ _maybe_init_ann / ann_index = None) -----------
+    # -- build / fold-in (≙ _maybe_init_ann / ann.add_items) -----------------
 
     def build(self, df: DataFrame) -> "IVFIndex":
         """(Re)build: train centroids, assign cells, persist the assignment.
-        The count() both materializes the cache and records the indexed size
-        used by the staleness check.
 
         The assignment is RANGE-partitioned and sorted on ``centroid_id``
         before the persist: each in-memory columnar batch then covers a
@@ -976,7 +1177,6 @@ class IVFIndex:
         shuffle at build time buys scan-proportionality at query time —
         the same layout decision as writing a table partitioned by its
         filter column."""
-        self.invalidate()
         cents_df = train_ivf_centroids(
             df, self.n_cells, vector_col=self.vector_col, seed=self.seed
         )
@@ -990,11 +1190,14 @@ class IVFIndex:
             .sortWithinPartitions("centroid_id")
             .persist()
         )
-        self._indexed_rows = assigned.count()
-        self._assigned = assigned
-        self._source_path = None
-        self._mutated = False
-        return self
+        return self._install(assigned, df)
+
+    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
+        cents_df = delta.sparkSession.createDataFrame(
+            self._centroids, "centroid_id: int, centroid: array<double>"
+        )
+        return self._frame.unionByName(
+            ivf_assign(delta, cents_df, vector_col=self.vector_col))
 
     def add_items(self, new_df: DataFrame) -> "IVFIndex":
         """Incremental ANN insert (≙ reference src/vectordb/ann.py:78-91
@@ -1004,83 +1207,20 @@ class IVFIndex:
         assignment. Centroids stay frozen, exactly as an HNSW insert grows
         the graph without moving entry points; the standard IVF maintenance
         trade-off (cells drift as the distribution moves) is answered by
-        the rebuild path: ``ensure()`` still retrains when invalidated.
-        Cost is O(|new batch|) — the reference's resize+add is O(new) too,
-        while its initial build is O(corpus), same asymmetry."""
-        if self._assigned is None or self._centroids is None:
+        :meth:`rebalance` and the rebuild path. Cost is O(|new batch|) —
+        the reference's resize+add is O(new) too, while its initial build
+        is O(corpus), same asymmetry."""
+        if self._frame is None or self._centroids is None:
             return self.build(new_df)
-        spark = new_df.sparkSession
-        cents_df = spark.createDataFrame(
-            self._centroids, "centroid_id: int, centroid: array<double>"
-        )
-        assigned_new = ivf_assign(new_df, cents_df, vector_col=self.vector_col)
-        old = self._assigned
-        merged = old.unionByName(assigned_new).persist()
-        self._indexed_rows = merged.count()
-        old.unpersist()
-        self._assigned = merged
+        self._indexed_rows, self._corpus_fp = self._swap(
+            self._fold_in(None, new_df).persist(), self._census)
         self._mutated = True
         return self
-
-    def invalidate(self) -> None:
-        """Explicit cache invalidation: the next ensure()/query() rebuilds."""
-        if self._assigned is not None:
-            self._assigned.unpersist()
-        self._assigned = None
-        self._centroids = None
-        self._indexed_rows = -1
-        self._source_path = None
-        self._mutated = False
-
-    def is_stale(self, df: DataFrame) -> bool:
-        """≙ reference ``ann_index is None or _ann_index_size != n_vectors``."""
-        return self._assigned is None or df.count() != self._indexed_rows
-
-    def _content_fingerprint(self, df: DataFrame) -> int:
-        """See :func:`corpus_fingerprint`; on the cached assignment it
-        reads in-memory blocks only."""
-        return corpus_fingerprint(df, self.id_col, self.vector_col)
-
-    def ensure(self, df: DataFrame) -> "IVFIndex":
-        """Lazy maintenance orchestration (reference rebuilds on access, not
-        on write — api.py:42-62 — and inserts incrementally when the index
-        already exists — api.py:63-79 via ann.add_items): cheap no-op when
-        fresh; when the corpus GREW by pure appends (every indexed id still
-        present with UNCHANGED content, only new ids added) the delta is
-        folded in via :meth:`add_items` — O(|delta|), centroids frozen, no
-        retrain; any other drift (updates, deletes) forces the full
-        rebuild. The append-vs-drift test is an anti-join on the id column
-        + two counts, and — before committing to the incremental path — an
-        (id, vector) fingerprint over the overlapping rows: without it, a
-        corpus whose existing vectors were updated in place AND new ids
-        appended would reconcile as a pure append and leave stale cached
-        assignments serving queries. All of it is paid by the SEARCH path,
-        keeping writes zero-job. Contract bound (same as the reference's
-        size-only check, src/vectordb/api.py:63-79): count-preserving pure
-        in-place updates with NO appends are not detected — call
-        :meth:`invalidate` after such a rewrite."""
-        if self._assigned is None or self._centroids is None:
-            return self.build(df)
-        n = df.count()
-        if n == self._indexed_rows:
-            return self
-        delta = df.join(
-            self._assigned.select(self.id_col), self.id_col, "left_anti"
-        )
-        if self._indexed_rows + delta.count() == n:
-            overlap_unchanged = self._content_fingerprint(
-                df.join(self._assigned.select(self.id_col), self.id_col,
-                        "left_semi")
-            ) == self._content_fingerprint(self._assigned)
-            if overlap_unchanged:
-                return self.add_items(delta)
-        return self.build(df)
 
     def cell_sizes(self) -> dict[int, int]:
         """Per-cell row counts — one small groupBy over the cached
         assignment (O(cells) rows to the driver)."""
-        rows = self._assigned.groupBy("centroid_id").count().collect()
-        return {int(r["centroid_id"]): int(r["count"]) for r in rows}
+        return _cell_sizes(self._frame)
 
     def rebalance(self, max_cell_size: int, max_rounds: int = 8,
                   lloyd_steps: int = 2) -> "IVFIndex":
@@ -1112,7 +1252,7 @@ class IVFIndex:
         :func:`ivf_assign`. Query semantics are unchanged: the cell
         partition just gets finer where it was hot, and an exhaustive
         probe still equals exact kNN."""
-        if self._assigned is None or self._centroids is None:
+        if self._frame is None or self._centroids is None:
             raise ValueError("rebalance() requires a built index")
         from pyspark.sql import Window
 
@@ -1147,9 +1287,8 @@ class IVFIndex:
                 cid: max(2, -(-sizes[cid] // max_cell_size))
                 for cid in oversized
             }
-            cold = self._assigned.filter(
-                ~F.col("centroid_id").isin(oversized))
-            hot = self._assigned.filter(F.col("centroid_id").isin(oversized))
+            cold = self._frame.filter(~F.col("centroid_id").isin(oversized))
+            hot = self._frame.filter(F.col("centroid_id").isin(oversized))
             # k_c deterministic seed rows per hot cell in one window pass;
             # the hash is salted by the round so a degenerate draw (cells
             # of near-identical vectors) gets a different one next time
@@ -1214,13 +1353,13 @@ class IVFIndex:
             # plans rooted at the materialized frame. Same rows, same
             # cache residency; LAZY (eager=False) so the cell_sizes()
             # census that follows is the round's ONE materializing action
-            # rather than a second job after an eager checkpoint.
+            # rather than a second job after an eager checkpoint. _swap
+            # runs that census BEFORE it releases the old assignment, which
+            # the split still reads.
             merged = cold.unionByName(split).localCheckpoint(eager=False)
-            self._assigned.unpersist()
-            self._assigned = merged
+            after = self._swap(merged, _cell_sizes)
             self._mutated = True
             self._centroids = sorted(cents.items())
-            after = self.cell_sizes()  # materializes the new cache too
             if after == sizes:  # identical-vector cell: cannot split
                 break
             sizes = after
@@ -1262,11 +1401,11 @@ class IVFIndex:
         the freshness contract (build/ensure once, then a read-only query
         burst, the reference's own deployment shape) opts out per query.
         Ignored (the check still runs) when no index exists yet."""
-        if not assume_fresh or self._assigned is None:
+        if not assume_fresh or self._frame is None:
             self.ensure(df)
         probe = self._probe_cells(query_vector, nprobe)
         return K.knn(
-            self._assigned.filter(F.col("centroid_id").isin(probe)),
+            self._frame.filter(F.col("centroid_id").isin(probe)),
             query_vector,
             k=k,
             metric=self.metric,
@@ -1287,10 +1426,10 @@ class IVFIndex:
         """Batch multi-probe kNN over the cached assignment — N queries in
         ONE plan (:func:`ivf_search_batch`); same freshness contract as
         :meth:`query`."""
-        if not assume_fresh or self._assigned is None:
+        if not assume_fresh or self._frame is None:
             self.ensure(df)
         return ivf_search_batch(
-            self._assigned,
+            self._frame,
             self._centroids,
             queries,
             k=k,
@@ -1303,68 +1442,29 @@ class IVFIndex:
         )
 
     # -- disk layout: the 100 TB serving path --------------------------------
+    #
+    # The saved table is ``partitionBy(centroid_id)`` and the sidecar holds
+    # the centroids (O(cells), driver-side state — same sidecar convention
+    # as sources/store.py). This is the layout the cached path only
+    # approximates: with the cell id a PARTITION COLUMN, a probe's
+    # ``centroid_id IN (...)`` prunes at the file listing — Spark schedules
+    # tasks only for the probed cells' files, so per-query cost is
+    # O(corpus/n_cells) tasks AND bytes, not a filter evaluated over every
+    # cached batch. At 100 TB the cache doesn't fit anyway; the partitioned
+    # table is the index. The range-partitioned write keeps ~1 file per
+    # cell (no small-files explosion across cells).
 
-    SIDECAR = "_ivf_index.json"
+    def _table(self) -> DataFrame:
+        return self._frame.repartitionByRange(
+            max(self.n_cells // 2, 1), "centroid_id")
 
-    def save(self, path: str) -> "IVFIndex":
-        """Persist the index as a parquet table ``partitionBy(centroid_id)``
-        plus a JSON sidecar holding the centroids (O(cells), driver-side
-        state — same sidecar convention as sources/store.py).
+    def _meta(self) -> dict:
+        return {"centroids": [[cid, vec] for cid, vec in self._centroids]}
 
-        This is the layout the cached path only approximates: with the cell
-        id a PARTITION COLUMN, a probe's ``centroid_id IN (...)`` prunes at
-        the file listing — Spark schedules tasks only for the probed cells'
-        files, so per-query cost is O(corpus/n_cells) tasks AND bytes, not
-        a filter evaluated over every cached batch. At 100 TB the cache
-        doesn't fit anyway; the partitioned table is the index. The
-        range-partitioned write keeps ~1 file per cell (no small-files
-        explosion across cells)."""
-        if self._assigned is None or self._centroids is None:
-            raise ValueError("index not built; call build()/ensure() first")
-        clustered = self._assigned.repartitionByRange(
-            max(self.n_cells // 2, 1), "centroid_id"
-        )
-        if self._source_path is not None and os.path.realpath(
-            path
-        ) == os.path.realpath(self._source_path):
-            # a loaded index's _assigned plan READS the table at `path`: a
-            # plain overwrite would delete the files it reads (Spark rejects
-            # the shape with "Cannot overwrite a path that is also being
-            # read from"). Unmutated → the bytes on disk already ARE the
-            # saved form, no-op; mutated (add_items/rebalance since load) →
-            # write to a staging dir and rename-aside swap (the
-            # store.compact pattern), then re-point at the fresh table.
-            if not self._mutated:
-                return self
-            import shutil
-
-            spark = self._assigned.sparkSession
-            staging, backup = path + ".stage", path + ".old"
-            clustered.write.mode("overwrite").partitionBy("centroid_id").parquet(
-                staging
-            )
-            os.rename(path, backup)
-            os.rename(staging, path)
-            shutil.rmtree(backup)
-            self._assigned.unpersist()
-            self._assigned = spark.read.parquet(path)
-            self._mutated = False
-        else:
-            clustered.write.mode("overwrite").partitionBy("centroid_id").parquet(
-                path
-            )
-        sidecar = {
-            "n_cells": self.n_cells,
-            "metric": self.metric,
-            "vector_col": self.vector_col,
-            "id_col": self.id_col,
-            "seed": self.seed,
-            "indexed_rows": self._indexed_rows,
-            "centroids": [[cid, vec] for cid, vec in self._centroids],
-        }
-        with open(os.path.join(path, self.SIDECAR), "w", encoding="utf-8") as f:
-            json.dump(sidecar, f)
-        return self
+    def _read_meta(self, meta: dict) -> None:
+        self._centroids = [
+            (int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]
+        ]
 
     def entry_points(self, n_per_cell: int = 1) -> list[int]:
         """Graph-walk entry selection from the index already built/on disk —
@@ -1377,7 +1477,7 @@ class IVFIndex:
         the result to :func:`graph_beam_search` so the walk starts from a
         spread of central, well-connected nodes instead of caller-fixed
         ids."""
-        if self._assigned is None or self._centroids is None:
+        if self._frame is None or self._centroids is None:
             raise ValueError("entry_points() requires a built index")
         from pyspark.sql import Window
 
@@ -1393,54 +1493,13 @@ class IVFIndex:
             F.asc("_d"), F.asc(self.id_col)
         )
         rows = (
-            self._assigned.withColumn("_d", d)
+            self._frame.withColumn("_d", d)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= n_per_cell)
             .select(self.id_col)
             .collect()
         )
         return sorted(int(r[0]) for r in rows)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
-        """Open a saved index WITHOUT caching: ``_assigned`` is the
-        partitioned parquet table itself, so ``query()`` plans a
-        partition-pruned scan of the probed cells only. ``ensure()``
-        semantics carry over unchanged (a drifted corpus forces an
-        in-memory rebuild).
-
-        Crash recovery (mirrors sources/store.py compact's self-heal): the
-        save() in-place swap is rename(path -> path.old); rename(path.stage
-        -> path). A crash between the renames leaves only ``path.old`` —
-        heal by renaming it back (and dropping a half-written stage dir)
-        before reading, so a torn save degrades to the PREVIOUS index
-        instead of FileNotFoundError."""
-        if not os.path.exists(os.path.join(path, cls.SIDECAR)) and os.path.isdir(
-            path + ".old"
-        ):
-            import shutil
-
-            if os.path.isdir(path):  # torn stage-rename: path exists but no sidecar
-                shutil.rmtree(path)
-            if os.path.isdir(path + ".stage"):
-                shutil.rmtree(path + ".stage")
-            os.rename(path + ".old", path)
-        with open(os.path.join(path, cls.SIDECAR), encoding="utf-8") as f:
-            meta = json.load(f)
-        idx = cls(
-            n_cells=int(meta["n_cells"]),
-            metric=meta["metric"],
-            vector_col=meta["vector_col"],
-            id_col=meta["id_col"],
-            seed=int(meta["seed"]),
-        )
-        idx._centroids = [
-            (int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]
-        ]
-        idx._indexed_rows = int(meta["indexed_rows"])
-        idx._assigned = spark.read.parquet(path)
-        idx._source_path = path
-        return idx
 
 
 def _make_block_topm_kernel(m_metric: str, m_edges: int,
@@ -2576,26 +2635,28 @@ def graph_hub_entries(graph: DataFrame, n_entries: int = 4) -> list[int]:
     return [int(r.dst) for r in rows]
 
 
-class GraphIndex:
-    """Cached batch GRAPH index with the same lazy-maintenance lifecycle as
-    :class:`IVFIndex` — the Spark orchestration of the reference's HNSW
-    (ref api.py:42-79: ``_maybe_init_ann`` rebuilds when sizes drift,
-    inserts incrementally when the index exists; ann.py:78-91 resize+add):
+class GraphIndex(PersistedIndex):
+    """Cached batch GRAPH index on the :class:`PersistedIndex` lifecycle —
+    the Spark orchestration of the reference's HNSW (ref api.py:42-79,
+    ann.py:78-91 resize+add):
 
     - ``build(df)`` — :func:`knn_graph` over the corpus, persisted.
-    - ``ensure(df)`` — no-op when fresh; PURE APPENDS (every indexed id
-      still present, content fingerprint unchanged) fold in via
-      :func:`knn_graph_incremental` (bit-identical to a rebuild — the
-      top-M merge theorem); any other drift rebuilds.
+    - pure-append fold-in — :func:`knn_graph_incremental` (bit-identical
+      to a rebuild — the top-M merge theorem). The edge list doesn't carry
+      the raw vectors, so the build-time corpus fingerprint is the cached
+      scalar the append test compares against.
     - ``query(df, qv)`` — :func:`graph_beam_search` from hub entries
       (:func:`graph_hub_entries`), walk params defaulting to the measured
       degree law (:func:`graph_params_for`).
     - ``save``/``load`` — edge-list parquet + JSON sidecar (plane seeds,
-      m, metric, indexed size, hub entries). Loading serves walks straight
-      off the table: each hop is an equi-join against it, no rebuild.
+      m, metric, indexed size, dim). Loading serves walks straight off the
+      table: each hop is an equi-join against it, no rebuild.
     """
 
     SIDECAR = "_graph_index.json"
+    PARAMS = ("n_plane_sets", "n_planes", "m", "metric", "id_col",
+              "vector_col", "seed", "blocks_per_bucket", "row_cap",
+              "refine_rounds", "refine_expand", "sym_m_rev")
 
     def __init__(
         self,
@@ -2614,6 +2675,7 @@ class GraphIndex:
         build_waves: int | None = None,
         build_dir: str | None = None,
     ):
+        super().__init__()
         self.n_plane_sets = n_plane_sets
         self.n_planes = n_planes
         self.m = m
@@ -2644,14 +2706,11 @@ class GraphIndex:
         # (symmetrize_edges — HNSW's reverse-link insertion in batch form).
         # Like refine_rounds, this voids the fold-in bit-equal theorem —
         # worse, re-topping a symmetrized union to m would DROP reverse
-        # edges — so with sym_m_rev > 0 any size drift rebuilds (ensure
-        # guards on it; HNSW-analog maintenance is amortized-rebuild here).
+        # edges — so with sym_m_rev > 0 any size drift rebuilds (_can_fold;
+        # HNSW-analog maintenance is amortized-rebuild here).
         self.sym_m_rev = int(sym_m_rev)
-        self._edges: DataFrame | None = None
-        self._indexed_rows = -1
         self._entries: list[int] | None = None
         self._dim: int | None = None
-        self._corpus_fp: int | None = None
 
     def _plane_sets(self, dim: int) -> list[list[list[float]]]:
         return [
@@ -2665,20 +2724,14 @@ class GraphIndex:
         return self._dim
 
     def build(self, df: DataFrame) -> "GraphIndex":
-        self.invalidate()
         if df.head(1) == []:
             # Empty corpus (e.g. a tiny corpus's ~1/level_mult upper sample):
             # a valid edge-less index — entries() returns [] and callers
             # (TwoLevelGraphIndex.query) route around it rather than crash.
             edges = df.sparkSession.createDataFrame(
                 [], "src bigint, dst bigint, score double"
-            ).persist()
-            edges.count()
-            self._edges = edges
-            self._indexed_rows = 0
-            self._entries = None
-            self._corpus_fp = 0
-            return self
+            )
+            return self._install(edges.persist(), df)
         dim = self._infer_dim(df)
         edges = knn_graph(
             df,
@@ -2704,87 +2757,46 @@ class GraphIndex:
             )
         if self.sym_m_rev > 0:
             edges = symmetrize_edges(edges, m_rev=self.sym_m_rev)
-        edges = edges.persist()
-        edges.count()
+        self._install(edges.persist(), df)
         for p in inters:
             p.unpersist()
-        self._edges = edges
-        self._indexed_rows = df.count()
-        self._entries = None
-        self._corpus_fp = corpus_fingerprint(df, self.id_col, self.vector_col)
         return self
 
-    def invalidate(self) -> None:
-        if self._edges is not None:
-            self._edges.unpersist()
-        self._edges = None
-        self._indexed_rows = -1
-        self._entries = None
-        self._corpus_fp = None
+    def _can_fold(self) -> bool:
+        return self.sym_m_rev == 0
 
-    def is_stale(self, df: DataFrame) -> bool:
-        return self._edges is None or df.count() != self._indexed_rows
+    def _indexed_ids(self) -> DataFrame:
+        return self._frame.select(F.col("src").alias(self.id_col)).distinct()
 
-    def ensure(self, df: DataFrame) -> "GraphIndex":
-        """Lazy maintenance: fresh -> no-op; pure append -> one-sided
-        incremental fold-in (EXACT, not approximate); other drift ->
-        rebuild. Same reconciliation protocol as IVFIndex.ensure: anti-join
-        on the id column + an (id, vector) content fingerprint over the
-        overlapping rows. The edge list doesn't carry the raw vectors, so
-        the build-time corpus fingerprint is cached as a scalar (and
-        persisted in the sidecar); the overlap in the NEW df is digested
-        and compared against it — an in-place vector update combined with
-        an append therefore cannot be misclassified as a pure append (it
-        would merge old edges scored on stale vectors). Contract bound
-        (same as IVFIndex / the reference's size-only check,
-        src/vectordb/api.py:63-79): a count-preserving pure in-place
-        rewrite with NO appends needs an explicit :meth:`invalidate`."""
-        if self._edges is None or self._indexed_rows == 0:
-            return self.build(df)
-        n = df.count()
-        if n == self._indexed_rows:
-            return self
-        indexed_ids = self._edges.select(F.col("src").alias(self.id_col)).distinct()
-        delta = df.join(indexed_ids, self.id_col, "left_anti")
-        corpus = df.join(indexed_ids, self.id_col, "left_semi")
-        if (
-            self.sym_m_rev == 0
-            and corpus.count() == self._indexed_rows
-            and delta.count() == n - self._indexed_rows
-            and self._corpus_fp is not None
-            and corpus_fingerprint(corpus, self.id_col, self.vector_col)
-            == self._corpus_fp
-        ):
-            dim = self._infer_dim(df)
-            merged = knn_graph_incremental(
-                self._edges,
-                corpus,
-                delta,
-                self._plane_sets(dim),
-                m=self.m,
-                id_col=self.id_col,
-                vector_col=self.vector_col,
-                metric=self.metric,
-                blocks_per_bucket=self.blocks_per_bucket,
-                row_cap=self.row_cap,
-            ).persist()
-            merged.count()
-            old = self._edges
-            self._edges = merged
-            old.unpersist()
-            self._indexed_rows = n
-            self._entries = None
-            self._corpus_fp ^= corpus_fingerprint(
-                delta, self.id_col, self.vector_col
-            )
-            return self
-        return self.build(df)
+    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
+        return knn_graph_incremental(
+            self._frame,
+            kept,
+            delta,
+            self._plane_sets(self._infer_dim(delta)),
+            m=self.m,
+            id_col=self.id_col,
+            vector_col=self.vector_col,
+            metric=self.metric,
+            blocks_per_bucket=self.blocks_per_bucket,
+            row_cap=self.row_cap,
+        )
+
+    def _swap(self, new: DataFrame, materialize=DataFrame.count):
+        self._entries = None  # hub entries belong to the old edge list
+        return super()._swap(new, materialize)
+
+    def _meta(self) -> dict:
+        return {"dim": self._dim}
+
+    def _read_meta(self, meta: dict) -> None:
+        self._dim = meta.get("dim")
 
     def entries(self, n_entries: int = 4) -> list[int]:
-        if self._edges is None:
+        if self._frame is None:
             raise ValueError("entries() requires a built index")
         if self._entries is None or len(self._entries) != n_entries:
-            self._entries = graph_hub_entries(self._edges, n_entries)
+            self._entries = graph_hub_entries(self._frame, n_entries)
         return self._entries
 
     def query(
@@ -2797,7 +2809,7 @@ class GraphIndex:
         n_entries: int = 4,
         assume_fresh: bool = False,
     ) -> DataFrame:
-        if not assume_fresh or self._edges is None:
+        if not assume_fresh or self._frame is None:
             self.ensure(df)
         p = graph_params_for(self._indexed_rows)
         walk_entries = self.entries(n_entries)
@@ -2811,7 +2823,7 @@ class GraphIndex:
                 vector_col=self.vector_col, id_col=self.id_col,
             )
         return graph_beam_search(
-            self._edges,
+            self._frame,
             df,
             query_vector,
             walk_entries,
@@ -2839,7 +2851,7 @@ class GraphIndex:
         (:func:`graph_beam_search_batch`), per-query results identical to
         :meth:`query` (shared recurrence, parity-tested); same freshness
         contract and edge-less brute fallback."""
-        if not assume_fresh or self._edges is None:
+        if not assume_fresh or self._frame is None:
             self.ensure(df)
         p = graph_params_for(self._indexed_rows)
         walk_entries = self.entries(n_entries)
@@ -2850,7 +2862,7 @@ class GraphIndex:
                 query_vector_col=query_vec_col, query_id_col=query_id_col,
             ).select(query_id_col, self.id_col, "score")
         return graph_beam_search_batch(
-            self._edges,
+            self._frame,
             df,
             queries,
             walk_entries,
@@ -2863,60 +2875,6 @@ class GraphIndex:
             query_vec_col=query_vec_col,
             metric=self.metric,
         )
-
-    def save(self, path: str) -> "GraphIndex":
-        if self._edges is None:
-            raise ValueError("index not built; call build()/ensure() first")
-        self._edges.write.mode("overwrite").parquet(path)
-        sidecar = {
-            "n_plane_sets": self.n_plane_sets,
-            "n_planes": self.n_planes,
-            "m": self.m,
-            "metric": self.metric,
-            "id_col": self.id_col,
-            "vector_col": self.vector_col,
-            "seed": self.seed,
-            "blocks_per_bucket": self.blocks_per_bucket,
-            "row_cap": self.row_cap,
-            "refine_rounds": self.refine_rounds,
-            "refine_expand": self.refine_expand,
-            "sym_m_rev": self.sym_m_rev,
-            "indexed_rows": self._indexed_rows,
-            "dim": self._dim,
-            "corpus_fp": self._corpus_fp,
-        }
-        with open(os.path.join(path, self.SIDECAR), "w", encoding="utf-8") as f:
-            json.dump(sidecar, f)
-        return self
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "GraphIndex":
-        with open(os.path.join(path, cls.SIDECAR), encoding="utf-8") as f:
-            meta = json.load(f)
-        idx = cls(
-            n_plane_sets=int(meta["n_plane_sets"]),
-            n_planes=int(meta["n_planes"]),
-            m=int(meta["m"]),
-            metric=meta["metric"],
-            id_col=meta["id_col"],
-            vector_col=meta["vector_col"],
-            seed=int(meta["seed"]),
-            blocks_per_bucket=(
-                int(meta["blocks_per_bucket"])
-                if meta.get("blocks_per_bucket") is not None
-                else None
-            ),
-            row_cap=int(meta.get("row_cap", 4096)),
-            refine_rounds=int(meta.get("refine_rounds", 0)),
-            refine_expand=int(meta.get("refine_expand", 8)),
-            sym_m_rev=int(meta.get("sym_m_rev", 0)),
-        )
-        idx._edges = spark.read.parquet(path)
-        idx._indexed_rows = int(meta["indexed_rows"])
-        idx._dim = int(meta["dim"]) if meta.get("dim") is not None else None
-        fp = meta.get("corpus_fp")
-        idx._corpus_fp = int(fp) if fp is not None else None
-        return idx
 
 
 class TwoLevelGraphIndex:
@@ -2985,6 +2943,10 @@ class TwoLevelGraphIndex:
         self.lower.invalidate()
         self.upper.invalidate()
 
+    @property
+    def built(self) -> bool:
+        return self.lower.built and self.upper.built
+
     def is_stale(self, df: DataFrame) -> bool:
         return self.lower.is_stale(df) or self.upper.is_stale(
             self._upper_df(df)
@@ -3008,11 +2970,7 @@ class TwoLevelGraphIndex:
         n_entries: int = 4,
         assume_fresh: bool = False,
     ) -> DataFrame:
-        if (
-            not assume_fresh
-            or self.lower._edges is None
-            or self.upper._edges is None
-        ):
+        if not assume_fresh or not self.built:
             self.ensure(df)
         p_up = graph_params_for(max(2, self.upper._indexed_rows))
         p_lo = graph_params_for(max(2, self.lower._indexed_rows))
@@ -3034,7 +2992,7 @@ class TwoLevelGraphIndex:
                     vector_col=self.vector_col, id_col=self.id_col,
                 )
             return graph_beam_search(
-                self.lower._edges,
+                self.lower._frame,
                 df,
                 query_vector,
                 lower_entries,
@@ -3046,8 +3004,8 @@ class TwoLevelGraphIndex:
                 metric=self.metric,
             )
         return graph_two_level_search(
-            self.upper._edges,
-            self.lower._edges,
+            self.upper._frame,
+            self.lower._frame,
             df,
             query_vector,
             upper_entries,
@@ -3083,17 +3041,13 @@ class TwoLevelGraphIndex:
         (:func:`graph_two_level_search_batch`, which also owns the
         degenerate-layer fallbacks); same freshness contract and law-degree
         walk defaults as :meth:`query`."""
-        if (
-            not assume_fresh
-            or self.lower._edges is None
-            or self.upper._edges is None
-        ):
+        if not assume_fresh or not self.built:
             self.ensure(df)
         p_up = graph_params_for(max(2, self.upper._indexed_rows))
         p_lo = graph_params_for(max(2, self.lower._indexed_rows))
         return graph_two_level_search_batch(
-            self.upper._edges,
-            self.lower._edges,
+            self.upper._frame,
+            self.lower._frame,
             df,
             queries,
             self.upper.entries(n_entries),
@@ -3110,41 +3064,53 @@ class TwoLevelGraphIndex:
             metric=self.metric,
         )
 
-    def save(self, path: str) -> "TwoLevelGraphIndex":
-        if self.lower._edges is None or self.upper._edges is None:
-            raise ValueError("index not built; call build()/ensure() first")
-        os.makedirs(path, exist_ok=True)
-        self.lower.save(os.path.join(path, "_lower"))
-        self.upper.save(os.path.join(path, "_upper"))
+    # -- disk layout: the two layers' saved dirs plus the meta sidecar,
+    # written and swapped as ONE directory ----------------------------------
+
+    LAYERS = ("_lower", "_upper")
+
+    def _layers(self, path: str):
+        return zip((self.lower, self.upper),
+                   (os.path.join(path, d) for d in self.LAYERS))
+
+    def _reads(self, path: str) -> bool:
+        return any(layer._reads(p) for layer, p in self._layers(path))
+
+    def _attach(self, spark: SparkSession, path: str) -> None:
+        for layer, p in self._layers(path):
+            layer._attach(spark, p)
+
+    def _write(self, path: str) -> None:
+        for layer, p in self._layers(path):
+            layer._write(p)
         meta = {"level_mult": self.level_mult, "salt": self.salt}
         with open(os.path.join(path, self.META), "w", encoding="utf-8") as f:
             json.dump(meta, f)
+
+    def save(self, path: str) -> "TwoLevelGraphIndex":
+        """Same contract as :meth:`PersistedIndex.save`, for both layers."""
+        if not self.built:
+            raise ValueError("index not built; call build()/ensure() first")
+        over = self._reads(path)
+        if over and not (self.lower._mutated or self.upper._mutated):
+            return self
+        swap_dir(path, self._write)
+        if over:
+            self._attach(self.lower._frame.sparkSession, path)
         return self
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "TwoLevelGraphIndex":
+        heal(path)
         with open(os.path.join(path, cls.META), encoding="utf-8") as f:
             meta = json.load(f)
-        lower = GraphIndex.load(spark, os.path.join(path, "_lower"))
-        upper = GraphIndex.load(spark, os.path.join(path, "_upper"))
-        idx = cls(
-            level_mult=int(meta["level_mult"]),
-            m_lower=lower.m,
-            m_upper=upper.m,
-            n_plane_sets=lower.n_plane_sets,
-            n_planes=lower.n_planes,
-            metric=lower.metric,
-            id_col=lower.id_col,
-            vector_col=lower.vector_col,
-            seed=lower.seed,
-            salt=meta.get("salt", "hnsw_upper"),
-            row_cap=lower.row_cap,
-            refine_rounds=lower.refine_rounds,
-            refine_expand=lower.refine_expand,
-            sym_m_rev=lower.sym_m_rev,
-        )
-        idx.lower = lower
-        idx.upper = upper
+        lower, upper = (GraphIndex.load(spark, os.path.join(path, d))
+                        for d in cls.LAYERS)
+        idx = cls(level_mult=int(meta["level_mult"]),
+                  salt=meta.get("salt", "hnsw_upper"))
+        idx.lower, idx.upper = lower, upper
+        idx.id_col, idx.vector_col, idx.metric = (
+            lower.id_col, lower.vector_col, lower.metric)
         return idx
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from .ann import PersistedIndex, train_ivf_centroids
 
 N_SUB = 8  #: subspaces (dim must divide evenly)
 K_CODES = 16  #: centroids per subspace -> 4 bits per code
@@ -632,17 +633,21 @@ def knn_join_pq(
 # --- IVFPQIndex: the compressed index lifecycle ----------------------------
 
 
-class IVFPQIndex:
-    """Disk-first IVF-PQ index lifecycle (the IVFIndex/GraphIndex
-    orchestration contract — reference api.py:42-62 ``_maybe_init_ann``
-    staleness protocol — applied to the compressed index): the persisted
-    state is the (id, cell, packed code) table, 8 B of payload per row,
-    written ``partitionBy(centroid_id)`` so a probe is partition pruning;
-    centroids and codebooks are driver-side literals stored in a JSON
-    sidecar (floats roundtrip exactly through repr). ``ensure`` rebuilds
-    on drift, but a PURE APPEND folds in one-sided: the delta is encoded
-    with the frozen centroids/codebooks (one scan-side projection over
-    only the new rows — the add_items discipline) and unioned.
+class IVFPQIndex(PersistedIndex):
+    """Disk-first IVF-PQ index on the :class:`~.ann.PersistedIndex`
+    lifecycle (reference api.py:42-62 ``_maybe_init_ann`` staleness
+    protocol, applied to the compressed index): the frame is the (id,
+    cell, packed code) table, 8 B of payload per row, saved
+    ``partitionBy(centroid_id)`` so a probe is partition pruning;
+    centroids and codebooks are driver-side literals stored in the JSON
+    sidecar (floats roundtrip exactly through repr). A PURE APPEND folds in
+    one-sided: the delta is encoded with the frozen centroids/codebooks
+    (one scan-side projection over only the new rows — exact, codes are a
+    deterministic function of the row) and unioned. The append test
+    compares the kept rows against the build-time fingerprint, so in-place
+    vector updates combined with appends cannot keep stale codes serving
+    queries — codes that no longer match the vectors used for exact
+    rerank.
 
     Training: MLlib KMeans centroids (ann.train_ivf_centroids) +
     per-subspace KMeans codebooks trained on RESIDUALS
@@ -651,6 +656,9 @@ class IVFPQIndex:
     deterministic fixture path the oracle gate uses."""
 
     SIDECAR = "_ivfpq_index.json"
+    PARAMS = ("n_cells", "n_sub", "k_codes", "metric", "id_col",
+              "vector_col", "seed")
+    PARTITION = "centroid_id"
 
     def __init__(
         self,
@@ -662,6 +670,7 @@ class IVFPQIndex:
         vector_col: str = "embedding",
         seed: int = 42,
     ):
+        super().__init__()
         self.n_cells = n_cells
         self.n_sub = n_sub
         self.k_codes = k_codes
@@ -671,9 +680,6 @@ class IVFPQIndex:
         self.seed = seed
         self._centroids: list[list[float]] | None = None
         self._codebooks: list[list[list[float]]] | None = None
-        self._codes: DataFrame | None = None
-        self._indexed_rows = -1
-        self._corpus_fp: int | None = None
 
     def build(
         self,
@@ -681,13 +687,10 @@ class IVFPQIndex:
         centroids: Sequence[Sequence[float]] | None = None,
         codebooks: Sequence[Sequence[Sequence[float]]] | None = None,
     ) -> "IVFPQIndex":
-        self.invalidate()
         if centroids is None:
-            from . import ann as A
-
             centroids = [
                 [float(x) for x in r.centroid]
-                for r in A.train_ivf_centroids(
+                for r in train_ivf_centroids(
                     df, self.n_cells, vector_col=self.vector_col,
                     seed=self.seed,
                 ).orderBy("centroid_id").collect()
@@ -706,72 +709,16 @@ class IVFPQIndex:
                 k_codes=self.k_codes, seed=self.seed,
             )
         self._codebooks = codebooks
-        codes = ivfpq_encode(
+        return self._install(self._encode(df).persist(), df)
+
+    def _encode(self, df: DataFrame) -> DataFrame:
+        return ivfpq_encode(
             df, self._centroids, self._codebooks,
             vector_col=self.vector_col, id_col=self.id_col,
-        ).persist()
-        self._indexed_rows = codes.count()
-        self._codes = codes
-        from .ann import corpus_fingerprint
+        )
 
-        self._corpus_fp = corpus_fingerprint(df, self.id_col, self.vector_col)
-        return self
-
-    def invalidate(self) -> None:
-        if self._codes is not None:
-            self._codes.unpersist()
-        self._codes = None
-        self._indexed_rows = -1
-        self._corpus_fp = None
-
-    def is_stale(self, df: DataFrame) -> bool:
-        return self._codes is None or df.count() != self._indexed_rows
-
-    def ensure(self, df: DataFrame) -> "IVFPQIndex":
-        """Fresh -> no-op; pure append -> encode ONLY the delta with the
-        frozen centroids/codebooks and union (exact — codes are a
-        deterministic function of the row); other drift -> rebuild. The
-        pure-append test is id-membership/count PLUS an (id, vector)
-        xxhash64 bit_xor fingerprint over the kept overlap (compared to the
-        build-time corpus fingerprint, cached as a scalar and persisted in
-        the sidecar): without it, in-place vector updates combined with
-        appends would keep stale PQ codes serving queries — codes that no
-        longer match the vectors used for exact rerank. Contract bound:
-        count-preserving pure in-place rewrites with NO appends still need
-        an explicit :meth:`invalidate` (the reference's own size-only
-        check, src/vectordb/api.py:63-79, shares this bound)."""
-        from .ann import corpus_fingerprint
-
-        if self._codes is None:
-            return self.build(df)
-        n = df.count()
-        if n == self._indexed_rows:
-            return self
-        indexed = self._codes.select(self.id_col)
-        delta = df.join(indexed, self.id_col, "left_anti")
-        kept = df.join(indexed, self.id_col, "left_semi")
-        if (
-            kept.count() == self._indexed_rows
-            and self._indexed_rows + delta.count() == n
-            and self._corpus_fp is not None
-            and corpus_fingerprint(kept, self.id_col, self.vector_col)
-            == self._corpus_fp
-        ):
-            enc = ivfpq_encode(
-                delta, self._centroids, self._codebooks,
-                vector_col=self.vector_col, id_col=self.id_col,
-            )
-            merged = self._codes.unionByName(enc).persist()
-            merged.count()
-            old = self._codes
-            self._codes = merged
-            old.unpersist()
-            self._indexed_rows = n
-            self._corpus_fp ^= corpus_fingerprint(
-                delta, self.id_col, self.vector_col
-            )
-            return self
-        return self.build(df)
+    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
+        return self._frame.unionByName(self._encode(delta))
 
     def query(
         self,
@@ -782,66 +729,23 @@ class IVFPQIndex:
         shortlist: int = 50,
         assume_fresh: bool = False,
     ) -> DataFrame:
-        if not assume_fresh or self._codes is None:
+        if not assume_fresh or self._frame is None:
             self.ensure(df)
         return knn_ivfpq(
             df, query_vector, self._centroids, self._codebooks,
             k=k, nprobe=nprobe, shortlist=shortlist, metric=self.metric,
             id_col=self.id_col, vector_col=self.vector_col,
-            codes=self._codes,
+            codes=self._frame,
         )
 
-    def save(self, path: str) -> "IVFPQIndex":
-        import json
-        import os
+    def _meta(self) -> dict:
+        return {"centroids": self._centroids, "codebooks": self._codebooks}
 
-        if self._codes is None:
-            raise ValueError("index not built; call build()/ensure() first")
-        self._codes.write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(path)
-        sidecar = {
-            "n_cells": self.n_cells,
-            "n_sub": self.n_sub,
-            "k_codes": self.k_codes,
-            "metric": self.metric,
-            "id_col": self.id_col,
-            "vector_col": self.vector_col,
-            "seed": self.seed,
-            "centroids": self._centroids,
-            "codebooks": self._codebooks,
-            "indexed_rows": self._indexed_rows,
-            "corpus_fp": self._corpus_fp,
-        }
-        with open(os.path.join(path, self.SIDECAR), "w", encoding="utf-8") as f:
-            json.dump(sidecar, f)
-        return self
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFPQIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, cls.SIDECAR), encoding="utf-8") as f:
-            meta = json.load(f)
-        idx = cls(
-            n_cells=int(meta["n_cells"]),
-            n_sub=int(meta["n_sub"]),
-            k_codes=int(meta["k_codes"]),
-            metric=meta["metric"],
-            id_col=meta["id_col"],
-            vector_col=meta["vector_col"],
-            seed=int(meta["seed"]),
-        )
-        idx._centroids = [[float(x) for x in c] for c in meta["centroids"]]
-        idx._codebooks = [
+    def _read_meta(self, meta: dict) -> None:
+        self._centroids = [[float(x) for x in c] for c in meta["centroids"]]
+        self._codebooks = [
             [[float(x) for x in c] for c in cb] for cb in meta["codebooks"]
         ]
-        idx._codes = spark.read.parquet(path)
-        idx._indexed_rows = int(meta["indexed_rows"])
-        fp = meta.get("corpus_fp")
-        idx._corpus_fp = int(fp) if fp is not None else None
-        return idx
 
 
 def probe_cells_expr(

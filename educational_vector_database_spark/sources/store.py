@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,15 +51,56 @@ def _config_path(path: str) -> str:
     return os.path.join(path, CONFIG_NAME)
 
 
-def save(df: DataFrame, path: str, config: StoreConfig, mode: str = "overwrite") -> None:
-    """Write the store (reference ``VectorDB.save``, api.py:174-189).
+def swap_dir(path: str, write) -> None:
+    """Replace the directory ``path`` with what ``write(stage)`` writes,
+    never leaving no ``path`` behind: write a staging dir next to it,
+    rename the old directory aside, rename the staging dir in, drop the
+    old one. ``write`` may read the files under ``path`` (a store or index
+    saved back over its own source), since they stay in place until the
+    staging write has finished. Single writer, no concurrent reader: a
+    reader racing the two renames sees a missing directory. A crash
+    between them leaves only ``path + ".old"``, which :func:`heal` renames
+    back; every swap and every load heals first."""
+    path = path.rstrip("/")
+    stage, old = path + ".stage", path + ".old"
+    heal(path)
+    for leftover in (stage, old):  # from an earlier swap cut by a crash
+        shutil.rmtree(leftover, ignore_errors=True)
+    write(stage)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
 
-    ``mode="append"`` is the incremental-ingest path (S1/S7->I1 in SURVEY.md):
-    appends new parquet files without touching existing ones.
-    """
+
+def heal(path: str) -> None:
+    """Undo a :func:`swap_dir` that a crash cut between its two renames:
+    only ``path + ".old"`` is left, so rename it back and the read sees
+    the previous version."""
+    path = path.rstrip("/")
+    if not os.path.exists(path) and os.path.isdir(path + ".old"):
+        os.rename(path + ".old", path)
+
+
+def write_store(df: DataFrame, path: str, config: StoreConfig, mode: str) -> None:
+    """The store's files, written in place: parquet + config sidecar."""
     df.write.mode(mode).parquet(path)
     with open(_config_path(path), "w", encoding="utf-8") as f:
         json.dump(asdict(config), f, indent=2)
+
+
+def save(df: DataFrame, path: str, config: StoreConfig, mode: str = "overwrite") -> None:
+    """Write the store (reference ``VectorDB.save``, api.py:174-189).
+
+    ``mode="overwrite"`` goes through :func:`swap_dir`, so a store loaded
+    from ``path`` can be saved back over it. ``mode="append"`` is the
+    incremental-ingest path (S1/S7->I1 in SURVEY.md): appends new parquet
+    files without touching existing ones.
+    """
+    if mode == "overwrite":
+        swap_dir(path, lambda stage: write_store(df, stage, config, mode))
+    else:
+        write_store(df, path, config, mode)
 
 
 def load(spark: SparkSession, path: str) -> tuple[DataFrame, StoreConfig]:
@@ -66,6 +108,7 @@ def load(spark: SparkSession, path: str) -> tuple[DataFrame, StoreConfig]:
 
     Missing/old sidecars get reference-compatible defaults (metric="cosine",
     use_approx=False — api.py:199-203); dim is inferred from the data."""
+    heal(path)
     df = spark.read.parquet(path)
     cfg_file = _config_path(path)
     if os.path.exists(cfg_file):
@@ -103,7 +146,6 @@ def _drop_table_and_location(spark: SparkSession, table: str) -> None:
         fs.delete(jpath, True)
     except Exception:
         # last-resort local cleanup (e.g. no JVM gateway in a mock session)
-        import shutil
         from urllib.parse import urlparse
 
         local = urlparse(location)
@@ -152,48 +194,32 @@ def save_as(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwri
 
 def compact(spark: SparkSession, path: str, target_files: int = 8) -> int:
     """Small-files maintenance (the OPTIMIZE of every lakehouse): rewrite
-    the store's parquet directory into ``target_files`` files, atomically
-    enough for a single writer — stage the compacted copy next to the
-    store, rename the old directory aside, rename the staging in, delete
-    the old. A crash between the renames leaves either the original or a
-    recoverable ``.old`` — never no store (the same swap discipline as the
-    streaming MERGE sink).
+    the store's parquet directory into ``target_files`` files through
+    :func:`swap_dir` (the same swap as every store and index save), so a
+    crash leaves either the original or a recoverable ``.old`` — never no
+    store — and a torn earlier swap is healed on entry.
 
     Why it matters at scale: micro-batch appends (S7/I1) accrete one file
     per batch; a million 100 KB files turn every scan's file listing and
     task scheduling into the bottleneck long before I/O does. Compaction
     is a single repartition job — O(data) once, amortized over every
     subsequent read. Returns the number of data files after compaction.
-    The config sidecar is preserved verbatim.
-
-    Single-writer, no-concurrent-reader contract: the swap is two renames,
-    and a reader racing the window between them sees a missing directory.
-    Crash recovery is automatic: on entry, if ``path`` is gone but the
-    renamed-aside ``path + ".old"`` survives (a crash landed between the
-    two renames), it is renamed back before proceeding — so a follow-up
-    load()/compact() self-heals instead of failing with ENOENT."""
-    import shutil
-
-    old = path.rstrip("/") + ".old"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-
+    The config sidecar is preserved verbatim."""
+    heal(path)
     df = spark.read.parquet(path)
     cfg_file = _config_path(path)
     cfg_raw = None
     if os.path.exists(cfg_file):
         with open(cfg_file, encoding="utf-8") as f:
             cfg_raw = f.read()
-    staging = path.rstrip("/") + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.repartition(target_files).write.mode("overwrite").parquet(staging)
-    if cfg_raw is not None:
-        with open(os.path.join(staging, CONFIG_NAME), "w", encoding="utf-8") as f:
-            f.write(cfg_raw)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+
+    def write(stage: str) -> None:
+        df.repartition(target_files).write.parquet(stage)
+        if cfg_raw is not None:
+            with open(_config_path(stage), "w", encoding="utf-8") as f:
+                f.write(cfg_raw)
+
+    swap_dir(path, write)
     return sum(
         1 for n in os.listdir(path) if n.endswith(".parquet")
     )
@@ -220,6 +246,7 @@ def load_or_init(
 ) -> tuple[DataFrame, StoreConfig]:
     """Load if the store exists, else an empty frame with the right schema
     (reference ``load_or_init_db``, server.py:35-44)."""
+    heal(path)
     if os.path.exists(_config_path(path)) or (
         os.path.isdir(path) and any(n.endswith(".parquet") for n in os.listdir(path))
     ):

@@ -315,7 +315,7 @@ def test_ensure_update_plus_append_forces_rebuild(spark, sf_dir):
     # and the cached assignment now reflects the mutated vectors
     got = {
         (r.vec_id, round(float(r.embedding[0]), 5))
-        for r in idx._assigned.select("vec_id", "embedding")
+        for r in idx._frame.select("vec_id", "embedding")
         .filter("vec_id < 3").collect()
     }
     want = {
@@ -544,7 +544,7 @@ def test_ivf_entry_points_nearest_members(spark, sf_dir):
     mat = np.array([[float(x) for x in r.embedding] for r in rows])
     cents = {cid: np.array(cv) for cid, cv in idx._centroids}
     assigned = {int(r.vec_id): int(r.centroid_id)
-                for r in idx._assigned.select("vec_id", "centroid_id").collect()}
+                for r in idx._frame.select("vec_id", "centroid_id").collect()}
     want = []
     for cid, cv in cents.items():
         mem = [i for i in range(len(ids)) if assigned[int(ids[i])] == cid]
@@ -557,24 +557,37 @@ def test_ivf_entry_points_nearest_members(spark, sf_dir):
     idx.invalidate()
 
 
-def test_ivf_save_crash_heal(spark, sf_dir, tmp_path):
-    """A crash between save()'s two renames leaves only <path>.old;
-    load() heals by renaming it back (store.compact's self-heal contract,
-    round-6 ADVICE item)."""
+def _check_crash_heal(spark, sf_dir, tmp_path, idx):
     emb = _emb(spark, sf_dir).limit(120)
-    idx = A.IVFIndex(n_cells=3).build(emb)
-    path = str(tmp_path / "ivf_heal")
+    idx.build(emb)
+    path = str(tmp_path / "heal")
     idx.save(path)
     idx.invalidate()
     os.rename(path, path + ".old")  # simulate torn swap
-    healed = A.IVFIndex.load(spark, path)
+    healed = type(idx).load(spark, path)
     assert os.path.isdir(path) and not os.path.exists(path + ".old")
     assert healed._indexed_rows == 120
 
 
+def test_ivf_save_crash_heal(spark, sf_dir, tmp_path):
+    """A crash between save()'s two renames leaves only <path>.old;
+    load() heals by renaming it back (the shared store.swap_dir/heal
+    contract, round-6 ADVICE item)."""
+    _check_crash_heal(spark, sf_dir, tmp_path, A.IVFIndex(n_cells=3))
+
+
+@pytest.mark.parametrize("kind", ["graph", "ivfpq"])
+def test_save_crash_heal_graph_pq(spark, sf_dir, tmp_path, kind):
+    """The same torn-swap heal for the other persisted indexes."""
+    from educational_vector_database_spark.operators import pq as PQ
+
+    idx = A.GraphIndex() if kind == "graph" else PQ.IVFPQIndex(n_cells=3)
+    _check_crash_heal(spark, sf_dir, tmp_path, idx)
+
+
 def test_vectordb_load_corrupt_ivf_sidecar(spark, tmp_path):
     """A corrupt _ivf_index sidecar falls back to the lazy-rebuild path
-    (db._ivf = None) instead of failing the whole load — api.py docstring
+    (db._index = None) instead of failing the whole load — api.py docstring
     contract, round-6 ADVICE item."""
     import numpy as np
 
@@ -592,7 +605,7 @@ def test_vectordb_load_corrupt_ivf_sidecar(spark, tmp_path):
     with open(sidecar, "w") as f:
         f.write("{not json")
     db2 = VectorDB.load(spark, path)
-    assert db2._ivf is None
+    assert db2._index is None
     got = db2.search_vector(rows[0][1], k=2).collect()  # lazy rebuild works
     assert got[0].vec_id == 0
 
@@ -672,9 +685,9 @@ def test_graph_index_lifecycle(spark, sf_dir, tmp_path):
     # pure append -> incremental fold-in, bit-identical to a rebuild
     idx.ensure(emb)
     assert idx._indexed_rows == emb.count() > n0
-    got = {(r.src, r.dst): r.score for r in idx._edges.collect()}
+    got = {(r.src, r.dst): r.score for r in idx._frame.collect()}
     fresh = A.GraphIndex(n_plane_sets=2, m=5).build(emb)
-    want = {(r.src, r.dst): r.score for r in fresh._edges.collect()}
+    want = {(r.src, r.dst): r.score for r in fresh._frame.collect()}
     assert got == want
     # hub entries are deterministic and part of the saved/loaded contract
     ent = idx.entries(3)
@@ -684,7 +697,7 @@ def test_graph_index_lifecycle(spark, sf_dir, tmp_path):
     idx.invalidate()
     loaded = A.GraphIndex.load(spark, path)
     assert loaded._indexed_rows == emb.count()
-    assert {(r.src, r.dst) for r in loaded._edges.collect()} == set(want)
+    assert {(r.src, r.dst) for r in loaded._frame.collect()} == set(want)
     qv = _qv(spark, sf_dir, 7)
     rows = loaded.query(emb, qv, k=5, assume_fresh=True).collect()
     assert len(rows) == 5
@@ -702,7 +715,7 @@ def test_graph_index_ensure_rebuilds_on_drift(spark, sf_dir):
     drifted = emb.filter(F.col("vec_id") % 7 != 0)  # deletions
     idx.ensure(drifted)
     assert idx._indexed_rows == drifted.count()
-    srcs = {r.src for r in idx._edges.select("src").distinct().collect()}
+    srcs = {r.src for r in idx._frame.select("src").distinct().collect()}
     assert all(s % 7 != 0 for s in srcs)  # removed ids left the graph
     idx.invalidate()
 
@@ -781,9 +794,9 @@ def test_graph_index_ensure_update_plus_append_rebuilds(spark, sf_dir):
     )
     idx.ensure(mutated)  # 150 overlapping ids, 30 appended, content moved
     assert idx._indexed_rows == mutated.count()
-    got = {(r.src, r.dst) for r in idx._edges.collect()}
+    got = {(r.src, r.dst) for r in idx._frame.collect()}
     fresh = A.GraphIndex(n_plane_sets=2, m=4).build(mutated)
-    want = {(r.src, r.dst) for r in fresh._edges.collect()}
+    want = {(r.src, r.dst) for r in fresh._frame.collect()}
     assert got == want  # rebuilt on the mutated vectors, not merged stale
     idx.invalidate()
     fresh.invalidate()
@@ -886,8 +899,8 @@ def test_two_level_index_lifecycle(spark, sf_dir, tmp_path):
         level_mult=4, m_lower=6, m_upper=6, n_plane_sets=2, n_planes=3
     ).build(e)
     for layer in ("lower", "upper"):
-        got = {(r.src, r.dst) for r in getattr(idx, layer)._edges.collect()}
-        want = {(r.src, r.dst) for r in getattr(fresh, layer)._edges.collect()}
+        got = {(r.src, r.dst) for r in getattr(idx, layer)._frame.collect()}
+        want = {(r.src, r.dst) for r in getattr(fresh, layer)._frame.collect()}
         assert got == want, f"{layer} fold-in != fresh build"
     # save/load roundtrip: identical walk result
     path = str(tmp_path / "tl_idx")
@@ -1397,7 +1410,7 @@ def test_graph_index_refine_rounds_build_and_sidecar(spark, sf_dir, tmp_path):
     e = _emb(spark, sf_dir).limit(80)
     idx = A.GraphIndex(m=6, n_planes=3, refine_rounds=1, refine_expand=3)
     idx.build(e)
-    got = {(int(r.src), int(r.dst)) for r in idx._edges.collect()}
+    got = {(int(r.src), int(r.dst)) for r in idx._frame.collect()}
     base = A.knn_graph(e, idx._plane_sets(idx._infer_dim(e)), m=6)
     want = {(int(r.src), int(r.dst))
             for r in A.knn_graph_refine(base, e, m=6, expand=3).collect()}
@@ -1406,7 +1419,7 @@ def test_graph_index_refine_rounds_build_and_sidecar(spark, sf_dir, tmp_path):
     idx.save(p)
     back = A.GraphIndex.load(spark, p)
     assert back.refine_rounds == 1 and back.refine_expand == 3
-    assert back._edges.count() == len(want)
+    assert back._frame.count() == len(want)
 
 def test_two_level_index_refine_rounds_build_and_sidecar(
     spark, sf_dir, tmp_path
@@ -1421,7 +1434,7 @@ def test_two_level_index_refine_rounds_build_and_sidecar(
         refine_rounds=1, refine_expand=3,
     )
     idx.build(e)
-    got_lo = {(int(r.src), int(r.dst)) for r in idx.lower._edges.collect()}
+    got_lo = {(int(r.src), int(r.dst)) for r in idx.lower._frame.collect()}
     base_lo = A.knn_graph(
         e, idx.lower._plane_sets(idx.lower._infer_dim(e)), m=6
     )
@@ -1430,7 +1443,7 @@ def test_two_level_index_refine_rounds_build_and_sidecar(
                .collect()}
     assert got_lo == want_lo and len(want_lo) > 0
     up = idx._upper_df(e)
-    got_up = {(int(r.src), int(r.dst)) for r in idx.upper._edges.collect()}
+    got_up = {(int(r.src), int(r.dst)) for r in idx.upper._frame.collect()}
     base_up = A.knn_graph(
         up, idx.upper._plane_sets(idx.upper._infer_dim(up)), m=4
     )
@@ -1460,7 +1473,7 @@ def test_graph_index_sym_m_rev_build_and_sidecar(spark, sf_dir, tmp_path):
     e = _emb(spark, sf_dir).limit(80)
     idx = A.GraphIndex(m=6, n_planes=3, sym_m_rev=4)
     idx.build(e)
-    got = {(int(r.src), int(r.dst)) for r in idx._edges.collect()}
+    got = {(int(r.src), int(r.dst)) for r in idx._frame.collect()}
     base = A.knn_graph(e, idx._plane_sets(idx._infer_dim(e)), m=6)
     want = {(int(r.src), int(r.dst))
             for r in A.symmetrize_edges(base, m_rev=4).collect()}
@@ -1471,12 +1484,12 @@ def test_graph_index_sym_m_rev_build_and_sidecar(spark, sf_dir, tmp_path):
     idx.save(p)
     back = A.GraphIndex.load(spark, p)
     assert back.sym_m_rev == 4
-    assert back._edges.count() == len(want)
+    assert back._frame.count() == len(want)
     # pure append: sym graph must rebuild (NOT fold in) — the rebuilt
     # edge set equals symmetrize(knn_graph(full)) exactly
     full = _emb(spark, sf_dir).limit(100)
     idx.ensure(full)
-    got2 = {(int(r.src), int(r.dst)) for r in idx._edges.collect()}
+    got2 = {(int(r.src), int(r.dst)) for r in idx._frame.collect()}
     base2 = A.knn_graph(full, idx._plane_sets(idx._infer_dim(full)), m=6)
     want2 = {(int(r.src), int(r.dst))
              for r in A.symmetrize_edges(base2, m_rev=4).collect()}
@@ -1492,7 +1505,7 @@ def test_two_level_index_sym_m_rev_passthrough(spark, sf_dir, tmp_path):
     )
     idx.build(e)
     assert idx.lower.sym_m_rev == 4 and idx.upper.sym_m_rev == 4
-    lo = {(int(r.src), int(r.dst)) for r in idx.lower._edges.collect()}
+    lo = {(int(r.src), int(r.dst)) for r in idx.lower._frame.collect()}
     base = A.knn_graph(e, idx.lower._plane_sets(idx.lower._infer_dim(e)), m=6)
     want = {(int(r.src), int(r.dst))
             for r in A.symmetrize_edges(base, m_rev=4).collect()}
@@ -1641,9 +1654,9 @@ def test_graph_index_waved_build_serves_identically(spark, sf_dir, tmp_path):
         m=4, build_waves=3, build_dir=str(tmp_path / "gi_waves")
     ).build(e)
     sa = {(int(r.src), int(r.dst), float(r.score))
-          for r in a._edges.collect()}
+          for r in a._frame.collect()}
     sb = {(int(r.src), int(r.dst), float(r.score))
-          for r in b._edges.collect()}
+          for r in b._frame.collect()}
     assert sa == sb and len(sa) > 0
     qv = e.head().embedding
     ra = [(int(r.vec_id), float(r.score))

@@ -24,6 +24,7 @@ from educational_vector_database_spark.operators import knn as K
 from educational_vector_database_spark.operators.ann import (
     AUTO_BRUTE_MAX_ROWS,
     NN1_CLUSTERED_MARGIN,
+    IVFIndex,
     corpus_clusterability,
     recommend_index,
 )
@@ -229,7 +230,7 @@ def test_auto_reprobe_drops_stale_ivf_on_resize(spark):
     qv = df.filter(F.col("vec_id") == 1).head().embedding
     db.search_vector(qv, k=3).collect()
     assert db._auto["index_type"] == "ivf"
-    stale = db._ivf
+    stale = db._index
     assert stale is not None
     # grow the corpus past the 2x band with the same cluster structure
     grown = _gmm_df(spark, 2000, n_clusters=12, seed=26).withColumn(
@@ -239,8 +240,9 @@ def test_auto_reprobe_drops_stale_ivf_on_resize(spark):
     db.search_vector(qv, k=3).collect()
     assert db._auto["index_type"] == "ivf"
     assert db._n_cells == max(16, int(2600 ** 0.5))
-    assert db._ivf is not stale  # rebuilt at the new K
-    assert db._ivf.n_cells == db._n_cells
+    assert type(db._index) is IVFIndex
+    assert db._index is not stale  # rebuilt at the new K
+    assert db._index.n_cells == db._n_cells
 
 
 def test_nn1_sample_stays_bounded_in_cap_2cap_window(spark):

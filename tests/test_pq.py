@@ -313,7 +313,7 @@ def test_ivfpq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
         for r in PQ.ivfpq_encode(e, cents, cbs).collect()
     }
     assert {
-        (r.vec_id, r.centroid_id, r.pq_code) for r in part._codes.collect()
+        (r.vec_id, r.centroid_id, r.pq_code) for r in part._frame.collect()
     } == full
 
 
@@ -405,7 +405,7 @@ def test_ivfpq_ensure_update_plus_append_rebuilds(spark, sf_dir):
         ).collect()
     }
     got = {
-        (r.vec_id, r.centroid_id, r.pq_code) for r in idx._codes.collect()
+        (r.vec_id, r.centroid_id, r.pq_code) for r in idx._frame.collect()
     }
     assert got == want
     # and the scalar fingerprint tracks the new corpus: a subsequent pure

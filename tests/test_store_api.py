@@ -6,6 +6,12 @@ from pyspark.sql import functions as F
 
 from educational_vector_database_spark.api import VectorDB
 from educational_vector_database_spark.embeddings import DummyEmbeddings
+from educational_vector_database_spark.operators.ann import (
+    GraphIndex,
+    IVFIndex,
+    TwoLevelGraphIndex,
+)
+from educational_vector_database_spark.operators.pq import IVFPQIndex
 from educational_vector_database_spark.sources import store
 
 
@@ -188,7 +194,7 @@ def test_save_load_carries_built_ivf_index(spark, tmp_path):
     path = str(tmp_path / "store_with_idx")
     db.save(path)
     db2 = VectorDB.load(spark, path)
-    assert db2._ivf is not None and db2._ivf._assigned is not None
+    assert type(db2._index) is IVFIndex and db2._index.built
     got_df = db2.search_vector(q, k=3)
     assert [(r.vec_id, r.score) for r in got_df.collect()] == want
     # disk probe: the loaded index's scan partition-prunes on centroid_id
@@ -223,19 +229,19 @@ def test_vectordb_graph_index_search_and_roundtrip(spark, tmp_path):
     assert len(got) == 3
     scores = [r.score for r in got]
     assert scores == sorted(scores, reverse=True)
-    assert db._graph is not None and db._ivf is None
+    assert type(db._index) is GraphIndex
 
     path = str(tmp_path / "store_graph_idx")
     db.save(path)
     db2 = VectorDB.load(spark, path)
     assert db2.index_type == "graph"
-    assert db2._graph is not None and db2._graph._indexed_rows == 120
+    assert type(db2._index) is GraphIndex and db2._index._indexed_rows == 120
     got2 = db2.search_vector(q, k=3).collect()
     assert [(r.vec_id, r.score) for r in got2] == [(r.vec_id, r.score) for r in got]
     # the store itself stays a readable plain table
     assert spark.read.parquet(path).count() == 120
-    db._graph.invalidate()
-    db2._graph.invalidate()
+    db._index.invalidate()
+    db2._index.invalidate()
 
 
 def test_vectordb_unknown_index_type_raises(spark):
@@ -270,13 +276,13 @@ def test_vectordb_ivfpq_index_search_and_roundtrip(spark, tmp_path):
     assert got[0].vec_id == 7
     scores = [r.score for r in got]
     assert scores == sorted(scores, reverse=True)
-    assert db._ivfpq is not None and db._ivf is None and db._graph is None
+    assert type(db._index) is IVFPQIndex
 
     path = str(tmp_path / "store_ivfpq_idx")
     db.save(path)
     db2 = VectorDB.load(spark, path)
     assert db2.index_type == "ivfpq"
-    assert db2._ivfpq is not None and db2._ivfpq._indexed_rows == 120
+    assert type(db2._index) is IVFPQIndex and db2._index._indexed_rows == 120
     got2 = db2.search_vector(q, k=3).collect()
     assert [(r.vec_id, r.score) for r in got2] == [
         (r.vec_id, r.score) for r in got
@@ -364,7 +370,7 @@ def test_vectordb_two_level_index_serving_and_roundtrip(spark, tmp_path):
     qv = emb.filter("vec_id = 7").head().embedding
     got = db.search_vector(qv, k=5).collect()
     assert got[0].vec_id == 7 and abs(got[0].score - 1.0) < 1e-9
-    assert db._two_level is not None  # served by the hierarchy, not brute
+    assert type(db._index) is TwoLevelGraphIndex  # the hierarchy, not brute
     path = str(tmp_path / "db_tl")
     db.save(path)
     import os as _os
@@ -372,7 +378,7 @@ def test_vectordb_two_level_index_serving_and_roundtrip(spark, tmp_path):
     assert _os.path.isdir(_os.path.join(path, "_two_level_index"))
     db2 = VectorDB.load(spark, path)
     assert db2.index_type == "two_level"
-    assert db2._two_level is not None  # reattached, no rebuild needed
+    assert type(db2._index) is TwoLevelGraphIndex  # reattached, no rebuild
     got2 = db2.search_vector(qv, k=5).collect()
     assert [(r.vec_id, round(r.score, 9)) for r in got] == [
         (r.vec_id, round(r.score, 9)) for r in got2

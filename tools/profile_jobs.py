@@ -11,7 +11,8 @@ wall seconds alone.
 
 Usage: python tools/profile_jobs.py q1,q2,... [--repeats 2]
 Prints one JSON line per query: {"query", "construct_s", "execute_s",
-"n_jobs", "rows"} (best of repeats for times; jobs from the last repeat).
+"wall_s", "n_jobs", "rows"}. Every field, ``n_jobs`` included, comes from
+the repeat with the lowest wall time.
 """
 
 from __future__ import annotations

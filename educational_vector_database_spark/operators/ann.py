@@ -25,10 +25,11 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
@@ -36,6 +37,14 @@ from ..sources.store import heal, swap_dir
 from . import knn as K
 
 LSH_SEED = 42
+
+
+def _metric(metric: str) -> str:
+    """``metric`` lower-cased; an unsupported one raises ``ValueError``."""
+    m = metric.lower()
+    if m not in V.SUPPORTED_METRICS:
+        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
+    return m
 
 
 def corpus_fingerprint(
@@ -837,8 +846,6 @@ def ivf_search_batch(
 
     Returns ``(query_id, vec_id, score, rank)`` best-first per query —
     the :func:`operators.knn.knn_join` shape."""
-    from pyspark.sql import Window
-
     cents = sorted(
         ((int(c), [float(x) for x in v]) for c, v in centroids),
         key=lambda t: t[0],
@@ -1254,8 +1261,6 @@ class IVFIndex(PersistedIndex):
         probe still equals exact kNN."""
         if self._frame is None or self._centroids is None:
             raise ValueError("rebalance() requires a built index")
-        from pyspark.sql import Window
-
         vc = self.vector_col
 
         def _side_expr(seed_map: dict[int, list[list[float]]]):
@@ -1479,8 +1484,6 @@ class IVFIndex(PersistedIndex):
         ids."""
         if self._frame is None or self._centroids is None:
             raise ValueError("entry_points() requires a built index")
-        from pyspark.sql import Window
-
         v = V.as_double(self.vector_col)
         # distance to THIS row's assigned centroid, as a CASE over the cell id
         d = F.lit(float("inf"))
@@ -1613,6 +1616,23 @@ def _make_block_topm_kernel(m_metric: str, m_edges: int,
     return topm_blocks
 
 
+def _lsh_keyed(df: DataFrame, planes: Sequence, id_col: str,
+               vector_col: str) -> DataFrame:
+    """``(id, v, r, bkt)``: each row once per sign-LSH plane set ``r`` with
+    its bucket in that set. ``planes`` is one plane set or a list of them."""
+    plane_sets = [planes] if isinstance(planes[0][0], (int, float)) else list(planes)
+    keys = F.array(*[
+        F.struct(F.lit(r).cast("int").alias("r"),
+                 bucket_expr(F.col("v"), ps).alias("bkt"))
+        for r, ps in enumerate(plane_sets)
+    ])
+    return (
+        df.select(F.col(id_col).alias("id"), V.as_double(vector_col).alias("v"))
+        .select("id", "v", F.explode(keys).alias("k"))
+        .select("id", "v", F.col("k.r").alias("r"), F.col("k.bkt").alias("bkt"))
+    )
+
+
 def knn_graph(
     df: DataFrame,
     planes: Sequence,
@@ -1660,23 +1680,8 @@ def knn_graph(
     identical edges, in-flight shuffle bounded to O(corpus / n_waves)
     instead of O(R × corpus); the single-box answer to the measured 20M
     spill wall. Returns ``(src, dst, score)``."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
-    plane_sets = [planes] if isinstance(planes[0][0], (int, float)) else list(planes)
-    src = df.select(F.col(id_col).alias("id"), V.as_double(vector_col).alias("v"))
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(r).cast("int").alias("r"),
-                bucket_expr(F.col("v"), ps).alias("bkt"),
-            )
-            for r, ps in enumerate(plane_sets)
-        ]
-    )
-    keyed = src.select("id", "v", F.explode(keys).alias("k")).select(
-        "id", "v", F.col("k.r").alias("r"), F.col("k.bkt").alias("bkt")
-    )
+    m_l = _metric(metric)
+    keyed = _lsh_keyed(df, planes, id_col, vector_col)
     if n_waves is not None and n_waves > 1:
         if not work_dir:
             raise ValueError("knn_graph: n_waves > 1 requires work_dir")
@@ -1736,11 +1741,7 @@ def knn_graph_cells(
     the throughput tier (np.argsort(d², stable) — ties to lowest cid,
     same contract as ivf_assign_gemm, parity pytest-pinned).
     Returns ``(src, dst, score)``."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(
-            f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}"
-        )
+    m_l = _metric(metric)
     a_n = int(assigns)
     if a_n < 1:
         raise ValueError(f"assigns must be >= 1, got {assigns}")
@@ -1755,8 +1756,6 @@ def knn_graph_cells(
         F.col(id_col).alias("id"), V.as_double(vector_col).alias("v")
     )
     if assign_tier == "expr":
-        from pyspark.sql import Window
-
         ds = F.array(*[
             F.struct(
                 V.euclidean_distance(F.col("v"), V.vector_literal(r._cv))
@@ -1835,8 +1834,6 @@ def _topm_edges(cand: DataFrame, m: int) -> DataFrame:
     (src, ·) row) and the per-src window, so Catalyst plans
     partial-agg → Exchange(src) → final-agg → window with no second
     shuffle — verified in tests/test_plans.py."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
     return (
         cand.repartition("src")
@@ -1884,11 +1881,7 @@ def knn_graph_refine(
     corpus-sized, so the round runs identically on a 1000-executor cluster.
     Fully deterministic and SQL-replicable (the driver gate unrolls it).
     Returns the refined ``(src, dst, score)`` edge list."""
-    from pyspark.sql import Window
-
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
+    m_l = _metric(metric)
     ex = int(expand)
     w_f = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
     w_r = Window.partitionBy("dst").orderBy(F.desc("score"), F.asc("src"))
@@ -1957,8 +1950,6 @@ def symmetrize_edges(graph: DataFrame, m_rev: int = 8) -> DataFrame:
     list itself, so the transform is a constant-factor pass at any scale.
     Deterministic and SQL-replicable (window + union + group-max).
     Returns ``(src, dst, score)``."""
-    from pyspark.sql import Window
-
     w_in = Window.partitionBy("dst").orderBy(F.desc("score"), F.asc("src"))
     rev = (
         graph.withColumn("rn", F.row_number().over(w_in))
@@ -2038,26 +2029,11 @@ def knn_graph_incremental(
     O(|delta| · bucket-density) cost instead of O(corpus²/buckets). The
     caller contract: ``graph`` must be the knn_graph of ``corpus`` under
     the SAME plane sets / m / metric."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
-    plane_sets = [planes] if isinstance(planes[0][0], (int, float)) else list(planes)
+    m_l = _metric(metric)
 
     def _packed(df: DataFrame) -> DataFrame:
-        src = df.select(F.col(id_col).alias("id"), V.as_double(vector_col).alias("v"))
-        keys = F.array(
-            *[
-                F.struct(
-                    F.lit(r).cast("int").alias("r"),
-                    bucket_expr(F.col("v"), ps).alias("bkt"),
-                )
-                for r, ps in enumerate(plane_sets)
-            ]
-        )
-        keyed = src.select("id", "v", F.explode(keys).alias("k")).select(
-            "id", "v", F.col("k.r").alias("r"), F.col("k.bkt").alias("bkt")
-        )
-        return _salted_pack(keyed, ["r", "bkt"], blocks_per_bucket, row_cap)
+        return _salted_pack(_lsh_keyed(df, planes, id_col, vector_col),
+                            ["r", "bkt"], blocks_per_bucket, row_cap)
 
     delta_p, corp_p = _packed(new), _packed(corpus)
     # delta×corpus: every block combo within (r, bkt), both directions
@@ -2100,6 +2076,25 @@ def knn_graph_incremental(
     )
 
 
+class _Layer(NamedTuple):
+    """One walk layer: edge list, entries (ids, or ``n`` for the graph's
+    top-``n`` hubs), beam, hops, and an optional cached hub lookup."""
+
+    graph: DataFrame
+    entries: Sequence[int] | int
+    beam: int
+    hops: int
+    hubs: Callable[[int], list[int]] | None = None
+
+
+def _top_per_query(frame: DataFrame, n: int) -> DataFrame:
+    """Each query's top-``n`` rows of a ``(qid, id, score)`` frame under
+    (score DESC, id ASC) — one window partitioned by query."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
+    return (frame.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= int(n)).drop("rn"))
+
+
 def graph_beam_search_batch(
     graph: DataFrame,
     df: DataFrame,
@@ -2115,48 +2110,302 @@ def graph_beam_search_batch(
     metric: str = "cosine",
     checkpoint: bool = True,
 ) -> DataFrame:
-    """Batched beam search: N queries walk the graph SIMULTANEOUSLY — the
-    graph-index counterpart of the batch kNN join (operators/knn.py
-    knn_join; ≙ serving the reference's query loop as one plan). State is
-    keyed by (query_id, node): each hop is ONE equi-join of the combined
-    frontier against the edge list plus one row_number window partitioned
-    by query — per-hop cost tracks Σ_q |frontier|·m and the number of
-    Spark jobs is O(hops), NOT O(queries·hops). Scores are computed only
-    for visited (query, node) pairs, never the full cross product.
-    Returns ``(query_id, id, score)`` top-k per query, same recurrence and
-    tie-breaks as :func:`graph_beam_search` per query (parity-tested).
-    ``checkpoint=False`` keeps the full multi-hop lineage in one lazy plan
-    (plan-contract tests); the default truncates per hop via
-    localCheckpoint — the connected-components discipline, since a
-    ``hops``-deep self-referencing lineage otherwise re-executes earlier
-    hops at each action."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
-    from pyspark.sql import Window
+    """Batched beam search: N queries walk the graph SIMULTANEOUSLY (the
+    recurrence of :func:`graph_beam_search`; ≙ serving the reference's
+    query loop as one plan) through :func:`_walk`. Returns ``(query_id,
+    id, score)`` top-k per query. ``checkpoint=False`` keeps the SQL path's
+    multi-hop lineage in one lazy plan (plan-contract tests)."""
+    return _walk(
+        df, queries, _Layer(graph, entry_ids, beam, hops), k=k,
+        id_col=id_col, vector_col=vector_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col, metric=metric, checkpoint=checkpoint,
+    )
+
+
+def _walk(
+    df: DataFrame,
+    queries: DataFrame,
+    flat: _Layer,
+    upper: _Layer | None = None,
+    n_descend: int = 4,
+    descend_hops: int = 2,
+    *,
+    k: int,
+    id_col: str,
+    vector_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    metric: str,
+    checkpoint: bool = True,
+    nbytes: int | None = None,
+) -> DataFrame:
+    """Every graph walk, flat or — given ``upper`` — two-level: walk
+    ``upper``, take each query's top-``n_descend`` visited rows (scores
+    kept) as seeds, and walk ``flat.graph`` with ``flat.beam`` and
+    ``descend_hops``. Empty upper entries (an edge-less upper sample) walk
+    ``flat`` alone, from its entries with its hops; empty hub-derived
+    entries (no edges at all) score every row — never zero rows.
+
+    Under the broadcast threshold (:func:`_walk_fits`; ``nbytes`` is the
+    caller's bound, else one census job) the walk is ONE ``mapInPandas``
+    job after the node and edge collects (:class:`_FusedWalk`); above it,
+    SQL hops (:func:`_beam_visited_batch`). Both are bit-exact to the
+    hop-unrolled SQL oracle. Returns ``(query_id_col, id_col, score)``."""
+    m_l = _metric(metric)
+    graphs = [flat.graph] + ([upper.graph] if upper is not None else [])
+    fused = (_FusedWalk.collect(df, id_col, vector_col)
+             if _walk_fits(df, graphs, id_col, vector_col, nbytes) else None)
+
+    def entries(layer: _Layer) -> list[int]:
+        if not isinstance(layer.entries, int):
+            return [int(x) for x in layer.entries]
+        if fused is not None:
+            return fused.hubs(layer.graph, layer.entries)
+        return (layer.hubs or (lambda n: graph_hub_entries(layer.graph, n)))(
+            layer.entries)
+
+    up = entries(upper) if upper is not None else []
+    if up:
+        layers = [upper._replace(entries=up),
+                  flat._replace(entries=None, hops=descend_hops)]
+    else:
+        layers = [flat._replace(entries=entries(flat))]
+    brute = not up and isinstance(flat.entries, int) and not layers[0].entries
+    if fused is not None:
+        return fused.run(queries, layers, n_descend, k, brute, m_l,
+                         query_id_col, query_vec_col, id_col)
 
     q = queries.select(
         F.col(query_id_col).alias("qid"), V.as_double(query_vec_col).alias("qv")
     )
     nodes = df.select(F.col(id_col).alias("id"), V.as_double(vector_col).alias("nv"))
-    entries = [int(x) for x in entry_ids]
-    seed = q.select("qid").crossJoin(
-        nodes.select("id").filter(F.col("id").isin(entries))
-    )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    visited = _beam_visited_batch(
-        q, nodes, graph, seed, beam, hops, m_l, checkpoint
+    if brute:
+        visited = q.crossJoin(nodes).select(
+            "qid", "id", V.similarity(m_l, "nv", "qv").alias("score"))
+    else:
+        seeds = q.select("qid").crossJoin(
+            nodes.select("id").filter(F.col("id").isin(layers[0].entries)))
+        for i, layer in enumerate(layers):
+            if i:
+                seeds = _top_per_query(visited, n_descend).select("qid", "id")
+            visited = _beam_visited_batch(q, nodes, layer.graph, seeds,
+                                          layer.beam, layer.hops, m_l,
+                                          checkpoint)
+    return _top_per_query(visited, k).select(
+        F.col("qid").alias(query_id_col), F.col("id").alias(id_col), "score"
     )
-    return (
-        visited.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .select(
-            F.col("qid").alias(query_id_col), F.col("id").alias(id_col), "score"
+
+
+def _walk_fits(
+    df: DataFrame,
+    graphs: Sequence[DataFrame],
+    id_col: str,
+    vector_col: str,
+    nbytes: int | None = None,
+) -> bool:
+    """The fused walk's guard: integral ids and edge endpoints, and the node
+    matrix plus every edge list — 8 bytes per id, vector element and
+    endpoint — within the session's ``autoBroadcastJoinThreshold``
+    (negative: never fused). ``nbytes`` is the caller's bound; without one,
+    ONE job sums the sizes per partition (not Catalyst's statistics: on a
+    persisted edge frame they overstate by orders of magnitude)."""
+    from pyspark.sql.types import IntegralType
+
+    cols = [df.schema[id_col]] + [g.schema[c] for g in graphs for c in ("src", "dst")]
+    limit = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if limit < 0 or not all(isinstance(f.dataType, IntegralType) for f in cols):
+        return False
+    if nbytes is None:
+        sizes = df.select((8 + 8 * F.size(vector_col)).cast("long").alias("b"))
+        for g in graphs:
+            sizes = sizes.unionByName(g.select(F.lit(16).cast("long").alias("b")))
+
+        def partial_sums(batches):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            yield pa.RecordBatch.from_pydict(
+                {"b": [sum(pc.sum(b.column(0)).as_py() or 0 for b in batches)]})
+
+        nbytes = sum(r.b for r in sizes.mapInArrow(partial_sums, "b long").collect())
+    return nbytes <= limit
+
+
+class _FusedWalk:
+    """Driver side of the fused walk: ``df``'s (id, vector) rows collected
+    once and sorted by id, and each walked graph's edge list collected once
+    into a CSR over node positions (``indptr``/``indices``). Edges with an
+    endpoint outside ``df`` are dropped — no walk can score it — but still
+    count toward the hubs, as in :func:`graph_hub_entries`."""
+
+    def __init__(self, ids: np.ndarray, mat: np.ndarray, id_type):
+        self.ids, self.mat, self.id_type = ids, mat, id_type
+        self._csr: dict[int, tuple] = {}
+
+    @classmethod
+    def collect(cls, df: DataFrame, id_col: str, vector_col: str):
+        """One job; None (keep the SQL path) when ``df`` has duplicate or
+        null ids, or a null, ragged or null-element vector."""
+        nv = V.as_double(vector_col)
+        pdf = df.select(
+            F.col(id_col).alias("id"), nv.alias("nv"),
+            F.coalesce(F.exists(nv, lambda x: x.isNull()), F.lit(True)).alias("bad"),
+        ).toPandas()
+        if (pdf["id"].isna().any() or pdf["bad"].astype(bool).any()
+                or pdf["nv"].map(len).nunique() > 1):
+            return None
+        order = np.argsort(pdf["id"].to_numpy(np.int64), kind="stable")
+        ids = pdf["id"].to_numpy(np.int64)[order]
+        if np.any(ids[1:] == ids[:-1]):
+            return None
+        mat = np.stack(pdf["nv"].to_numpy()[order]) if len(ids) else np.zeros((0, 0))
+        return cls(ids, mat, df.schema[id_col].dataType)
+
+    def _pos(self, x: np.ndarray) -> np.ndarray:
+        """Node position of each id in ``x``; -1 where absent."""
+        p = np.searchsorted(self.ids, x)
+        hit = p < len(self.ids)
+        hit[hit] = self.ids[p[hit]] == x[hit]
+        return np.where(hit, p, -1)
+
+    def _graph(self, graph: DataFrame) -> tuple:
+        """(indptr, indices, hub ids best-first) of ``graph``; one job."""
+        if id(graph) not in self._csr:
+            e = graph.select("src", "dst").dropna().toPandas()
+            dst = e["dst"].to_numpy(np.int64)
+            u, c = np.unique(dst, return_counts=True)
+            s, d = self._pos(e["src"].to_numpy(np.int64)), self._pos(dst)
+            s, d = s[(s >= 0) & (d >= 0)], d[(s >= 0) & (d >= 0)]
+            indptr = np.zeros(len(self.ids) + 1, np.int64)
+            np.cumsum(np.bincount(s, minlength=len(self.ids)), out=indptr[1:])
+            self._csr[id(graph)] = (indptr, d[np.argsort(s, kind="stable")],
+                                    u[np.lexsort((u, -c))])
+        return self._csr[id(graph)]
+
+    def _seeds(self, entries) -> np.ndarray | None:
+        """Positions of the ``entries`` present in ``df``, once each; None
+        (the descent's seeds) for a lower layer."""
+        if entries is None:
+            return None
+        p = self._pos(np.array(entries, np.int64))
+        return np.unique(p[p >= 0])
+
+    def hubs(self, graph: DataFrame, n: int) -> list[int]:
+        """:func:`graph_hub_entries` from the collected edges."""
+        return self._graph(graph)[2][: max(int(n), 0)].tolist()
+
+    def run(self, queries, layers, n_descend, k, brute, metric,
+            query_id_col, query_vec_col, id_col) -> DataFrame:
+        """Broadcast the arrays and run the walk as one ``mapInPandas``."""
+        from pyspark.sql.types import DoubleType, StructField, StructType
+
+        if brute:  # no edges: every row is a seed, and no hop
+            walk = [(None, None, np.arange(len(self.ids)), 0, 0)]
+        else:
+            walk = [self._graph(g)[:2] + (self._seeds(e), int(b), int(h))
+                    for g, e, b, h, _ in layers]
+        bc = queries.sparkSession.sparkContext.broadcast(
+            (self.ids, self.mat, walk, int(n_descend), int(k), metric))
+        qv = V.as_double(query_vec_col)
+        q = queries.select(
+            F.col(query_id_col).alias("qid"), qv.alias("qv"),
+            F.coalesce(F.exists(qv, lambda x: x.isNull()), F.lit(True)).alias("bad"),
         )
-    )
+        schema = StructType([
+            StructField(query_id_col, queries.schema[query_id_col].dataType),
+            StructField(id_col, self.id_type),
+            StructField("score", DoubleType()),
+        ])
+        return q.mapInPandas(_make_walk_kernel(bc, query_id_col, id_col), schema)
+
+
+def _make_walk_kernel(bc, query_id_col: str, id_col: str):
+    """mapInPandas kernel of the fused walk: each query row runs the whole
+    recurrence (:func:`graph_beam_search`, then the two-level descent) in
+    process against the broadcast ``(ids, mat, layers, n_descend, k,
+    metric)``; ``layers`` holds ``(indptr, indices, seeds, beam, hops)``,
+    ``seeds`` None below the descent. Bit-exact with the SQL walk: the
+    ``functions/vector.py`` formulas folded left to right over the
+    dimensions, never BLAS (``_make_block_topm_kernel``'s exact tier);
+    (score DESC, id ASC) orders with NaN largest, as Spark sorts — node
+    positions follow id order. A null, null-element or wrong-dimension
+    query vector raises (the SQL walk would score it null)."""
+
+    def walk(batches):
+        import numpy as np
+        import pandas as pd
+
+        ids, mat, layers, n_descend, k, metric = bc.value
+        n, dim = mat.shape
+
+        def fold(A, B):  # Σ A[:, i]·B[:, i], left to right, no BLAS
+            acc = np.zeros(len(A))
+            for i in range(dim):
+                acc = acc + A[:, i] * B[:, i]
+            return acc
+
+        def score(pos, q):  # q: the query as a (1, dim) row
+            X = mat[pos]
+            if metric == "euclidean":
+                D = X - q
+                return 1.0 / (1.0 + np.sqrt(fold(D, D)))
+            dot = fold(X, q)
+            if metric == "dot":
+                return dot
+            den = np.sqrt(fold(X, X)) * np.sqrt(fold(q, q))
+            return np.divide(dot, den, out=np.zeros(len(pos)), where=den != 0.0)
+
+        def top(pos, sc, m):  # (score DESC, NaN largest; id ASC)
+            nan = np.isnan(sc)
+            return np.lexsort((pos, -np.where(nan, 0.0, sc), ~nan))[: max(m, 0)]
+
+        def walk_layer(q, layer, pos, sc):
+            indptr, indices, _, beam, hops = layer
+            seen = np.zeros(n, bool)
+            seen[pos] = True
+            new_pos, new_sc = pos, sc
+            for h in range(1, hops + 1):
+                front = new_pos[top(new_pos, new_sc, beam)] if h > 1 else new_pos
+                cand = np.unique(np.concatenate(
+                    [indices[indptr[f]:indptr[f + 1]] for f in front]
+                    + [np.empty(0, np.int64)]))
+                new_pos = cand[~seen[cand]]
+                new_sc = score(new_pos, q)
+                seen[new_pos] = True
+                pos, sc = np.concatenate([pos, new_pos]), np.concatenate([sc, new_sc])
+            return pos, sc
+
+        for pdf in batches:
+            none = np.empty(0, np.int64)
+            rows, out_pos, out_sc = [none], [none], [np.empty(0)]
+            for r, (qv, bad) in enumerate(zip(pdf["qv"], pdf["bad"])):
+                if not n:
+                    break
+                if bad or len(qv) != dim:
+                    raise ValueError(
+                        f"graph walk: query {pdf['qid'].iat[r]!r} needs a "
+                        f"{dim}-d vector with no nulls")
+                q = np.asarray(qv, dtype=np.float64)[None, :]
+                pos = layers[0][2]
+                sc = score(pos, q)
+                for j, layer in enumerate(layers):
+                    if j:
+                        t = top(pos, sc, n_descend)
+                        pos, sc = pos[t], sc[t]
+                    pos, sc = walk_layer(q, layer, pos, sc)
+                t = top(pos, sc, k)
+                rows.append(np.full(len(t), r))
+                out_pos.append(pos[t])
+                out_sc.append(sc[t])
+            yield pd.DataFrame({
+                query_id_col: pdf["qid"].to_numpy()[np.concatenate(rows)],
+                id_col: ids[np.concatenate(out_pos)],
+                "score": np.concatenate(out_sc),
+            })
+
+    return walk
 
 
 def _beam_visited_batch(
@@ -2169,26 +2418,18 @@ def _beam_visited_batch(
     metric: str,
     checkpoint: bool,
 ) -> DataFrame:
-    """The batched walk recurrence shared by :func:`graph_beam_search_batch`
-    and the batched two-level walk. ``seed`` is an unscored ``(qid, id)``
-    frame; state is keyed by (query, node); each hop is ONE equi-join of
-    the combined frontier against the edge list + one per-query window —
-    job count O(hops), never O(queries·hops). Returns everything visited,
-    scored.
+    """The SQL walk recurrence, serving only walks above the fused walk's
+    guard (:func:`_walk_fits`) and the centroid-routed walk. ``seed`` is an
+    unscored ``(qid, id)`` frame; state is keyed by (query, node); each hop
+    is ONE equi-join of the combined frontier against the edge list + one
+    per-query window. Returns everything visited, scored.
 
     Join-side discipline (the 100 TB shape): the per-hop state frames —
-    frontier (≤ queries·beam rows) and candidates (≤ queries·beam·m) —
-    are BROADCAST into the joins against the two corpus-sized tables (the
-    edge list, the node vectors), so neither ever shuffles: each hop is a
-    scan-side hash probe of the persisted/partitioned big table. Without
-    the hint Catalyst picked SortMergeJoin for the node-scoring join
-    (profiled round 8), re-shuffling every stored VECTOR each hop — ~1 GB
-    per hop at 2M×64, unbounded at corpus scale, versus the few-MB
-    (qid, id) broadcast. Only the small-tuple bookkeeping (distinct,
-    anti-join on (qid, id), the per-query window) shuffles, and those
-    rows are bounded by the walk parameters, never the corpus."""
-    from pyspark.sql import Window
-
+    frontier (≤ queries·beam rows), candidates (≤ queries·beam·m) — are
+    BROADCAST into the joins against the edge list and the node vectors,
+    so neither corpus-sized table ever shuffles (unhinted, Catalyst picked
+    SortMergeJoin and re-shuffled every vector each hop, ~1 GB per hop at
+    2M×64). Only the walk-bounded (qid, id) bookkeeping shuffles."""
     edges = graph.select("src", "dst")
 
     def score(cand: DataFrame) -> DataFrame:
@@ -2201,32 +2442,20 @@ def _beam_visited_batch(
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=False) if checkpoint else df
 
-    # ZERO driver actions inside the walk (round 12; round 11 had cut the
-    # per-hop materializations from two to one, 34-108 Spark jobs down to
-    # O(hops), ~0.1-0.3 s scheduler+planning overhead apiece at bench
-    # scale — guide §1.2, fix the distributed shape first). The hop budget
-    # is a FIXED small integer — no driver decision ever depends on a
-    # hop's data — so the per-hop checkpoint is LAZY
-    # (``localCheckpoint(eager=False)``, the connected-components
-    # discipline): each hop's plan is truncated to a LogicalRDD at
-    # construction, every consumer (frontier cut, anti-join, union, the
-    # final top-k) shares that one RDD, and the whole walk executes as a
-    # single job chain under the caller's ONE action instead of one
-    # blocking job per hop. ``visited`` carries a ``hop`` tag so the
-    # frontier (top-beam of the last hop's rows), the anti-join side and
-    # the final result are all cheap reads of the SAME checkpointed
-    # frame. Recurrence and tie-breaks are unchanged (parity-pinned +
-    # oracle-gated).
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
+    # Jobs: each hop's frame is truncated by ``localCheckpoint(eager=False)``
+    # so every consumer (frontier cut, anti-join, union, final top-k) shares
+    # one RDD and no hop re-executes. Under AQE that checkpoint is NOT
+    # job-free: it runs the hop's broadcast and shuffle stages when it is
+    # called, so construction launches several jobs per hop (a 16-query
+    # two-level walk over 1,000 rows: 43 jobs) before the caller's action.
+    # ``visited`` carries a ``hop`` tag so the frontier (top-beam of the
+    # last hop's rows), the anti-join side and the result all read the
+    # SAME checkpointed frame.
     visited = _ckpt(score(seed).withColumn("hop", F.lit(0)))
     for h in range(1, hops + 1):
         frontier = visited.filter(F.col("hop") == h - 1)
         if h > 1:
-            frontier = (
-                frontier.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= beam)
-                .drop("rn")
-            )
+            frontier = _top_per_query(frontier, beam)
         cand = (
             edges.join(
                 F.broadcast(frontier.select("qid", F.col("id").alias("src"))),
@@ -2284,13 +2513,7 @@ def graph_cells_route_search_batch(
     walk itself is :func:`_beam_visited_batch` — state frames broadcast,
     corpus never re-shuffled. Deterministic end to end, so the whole
     serve is SQL-oracle-checkable. Returns (query_id, id, score) top-k."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(
-            f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}"
-        )
-    from pyspark.sql import Window
-
+    m_l = _metric(metric)
     q = queries.select(
         F.col(query_id_col).alias("qid"),
         V.as_double(query_vec_col).alias("qv"),
@@ -2326,19 +2549,11 @@ def graph_cells_route_search_batch(
         .filter(F.col("rn") <= int(seeds_per_cell))
         .select("qid", "id")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
     visited = _beam_visited_batch(
         q, nodes, graph, seeds, beam, hops, m_l, checkpoint
     )
-    return (
-        visited.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .select(
-            F.col("qid").alias(query_id_col),
-            F.col("id").alias(id_col),
-            "score",
-        )
+    return _top_per_query(visited, k).select(
+        F.col("qid").alias(query_id_col), F.col("id").alias(id_col), "score"
     )
 
 
@@ -2363,69 +2578,34 @@ def graph_two_level_search_batch(
 ) -> DataFrame:
     """Batched :func:`graph_two_level_search`: N queries descend the
     hierarchy SIMULTANEOUSLY — upper walk, per-query top-``n_descend``
-    descent cut (one window), lower walk — with job count O(hops_up +
-    hops), never O(queries). Per-query recurrence and tie-breaks are
-    identical to the single-query function (parity-tested). Returns
+    descent cut, lower walk — as one fused job under the broadcast
+    threshold, SQL hops above it (:func:`_walk`). Empty
+    ``upper_entry_ids`` walk the lower graph from its top-``n_descend``
+    hubs; an edge-less lower graph too scores every row. Returns
     ``(query_id, id_col, score)`` top-k per query."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
-    from pyspark.sql import Window
+    return _walk(
+        df, queries,
+        _Layer(lower_graph, max(1, int(n_descend)), beam, hops),
+        _Layer(upper_graph, upper_entry_ids, beam_up, hops_up),
+        n_descend, hops, k=k, id_col=id_col, vector_col=vector_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        metric=metric, checkpoint=checkpoint,
+    )
 
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), V.as_double(query_vec_col).alias("qv")
+
+def _one_query(df: DataFrame, query_vector: Sequence[float]) -> DataFrame:
+    """A single query vector as a one-row, one-partition query frame of
+    literals — no Python-side rows for a worker to deserialize."""
+    return df.sparkSession.range(0, 1, 1, 1).select(
+        F.lit(0).cast("long").alias("query_id"),
+        V.vector_literal(query_vector).alias("query_vec"),
     )
-    nodes = df.select(F.col(id_col).alias("id"), V.as_double(vector_col).alias("nv"))
-    entries = [int(x) for x in upper_entry_ids]
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    if not entries:
-        # Degenerate upper layer (tiny corpus: the ~1/level_mult hash sample
-        # yields an edge-less upper graph whose hub list is empty). Seed the
-        # LOWER walk from the lower graph's own hubs instead of silently
-        # returning zero rows.
-        entries = graph_hub_entries(lower_graph, n_entries=max(1, int(n_descend)))
-        if not entries:
-            # Lower graph edge-less too: brute-force every query against
-            # the (degenerate-tiny) corpus rather than return zero rows.
-            scored = q.crossJoin(nodes).select(
-                "qid", "id",
-                V.similarity(m_l, F.col("nv"), F.col("qv")).alias("score"),
-            )
-            return (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= k)
-                .drop("rn")
-                .select(
-                    F.col("qid").alias(query_id_col),
-                    F.col("id").alias(id_col), "score",
-                )
-            )
-        seeds = q.select("qid").crossJoin(
-            nodes.select("id").filter(F.col("id").isin(entries))
-        )
-    else:
-        seed_up = q.select("qid").crossJoin(
-            nodes.select("id").filter(F.col("id").isin(entries))
-        )
-        v_up = _beam_visited_batch(
-            q, nodes, upper_graph, seed_up, beam_up, hops_up, m_l, checkpoint
-        )
-        seeds = (
-            v_up.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= int(n_descend))
-            .select("qid", "id")
-        )
-    visited = _beam_visited_batch(
-        q, nodes, lower_graph, seeds, beam, hops, m_l, checkpoint
-    )
-    return (
-        visited.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .select(
-            F.col("qid").alias(query_id_col), F.col("id").alias(id_col), "score"
-        )
-    )
+
+
+def _best_first(batch: DataFrame, k: int, id_col: str) -> DataFrame:
+    """A one-query batch result as ``(id_col, score)``, best first."""
+    return batch.orderBy(F.desc("score"), F.asc(id_col)).limit(k).select(
+        id_col, "score")
 
 
 def graph_beam_search(
@@ -2451,67 +2631,12 @@ def graph_beam_search(
         frontier_h = top-``beam`` of cand_h   (score DESC, id ASC)
         result     = top-``k`` of visited_hops
 
-    Each hop is ONE equi-join against the (persisted) edge list + one
-    TakeOrdered — per-hop cost tracks the frontier×m fan-out, never the
-    corpus. ``hops`` is a fixed small integer (the walk depth), so the
-    driver-side loop is bounded and the lineage stays flat via
-    localCheckpoint — the connected-components pattern."""
-    m_l = metric.lower()
-    qv = V.vector_literal([float(x) for x in query_vector])
-    scored_nodes = df.select(
-        F.col(id_col).alias("id"),
-        V.similarity(m_l, V.as_double(vector_col), qv).alias("score"),
-    )
-    entries = [int(x) for x in entry_ids]
-    seed = scored_nodes.filter(F.col("id").isin(entries))
-    visited = _beam_visited(scored_nodes, graph, seed, beam, hops)
-    return visited.orderBy(F.desc("score"), F.asc("id")).limit(k).select(
-        F.col("id").alias(id_col), "score"
-    )
-
-
-def _beam_visited(
-    scored_nodes: DataFrame, graph: DataFrame, seed: DataFrame,
-    beam: int, hops: int,
-) -> DataFrame:
-    """The beam-walk recurrence shared by :func:`graph_beam_search` and the
-    two-level walk: ``visited`` starts at the scored ``seed`` rows, each hop
-    expands the frontier's out-edges (one equi-join against the edge list),
-    scores only the unvisited ids, and keeps the per-hop top-``beam`` as the
-    next frontier. Returns everything visited. ``hops`` is a fixed small
-    integer; lineage stays flat via localCheckpoint. The frontier/candidate
-    id sets are BROADCAST into the joins against the edge list and the
-    scored corpus (same discipline as the batch form): the corpus-sized
-    sides never shuffle — each hop is a scan-side hash probe."""
-    # ZERO driver actions inside the walk — the batch kernel's hop-tagged
-    # LAZY-checkpoint discipline (see _beam_visited_batch): the hop budget
-    # is fixed, no driver decision reads a hop's data, so every per-hop
-    # checkpoint is ``localCheckpoint(eager=False)`` — lineage truncated
-    # at construction, one shared RDD per hop, the whole walk runs under
-    # the caller's single action instead of one blocking job per hop
-    # (round 11 had already cut 34-108 jobs per walk row to O(hops); this
-    # removes the remaining O(hops) scheduler round-trips). The frontier,
-    # the anti-join side and the result all read the SAME checkpointed
-    # frame; recurrence and tie-breaks unchanged.
-    edges = graph.select("src", "dst")
-    visited = seed.withColumn("hop", F.lit(0)).localCheckpoint(eager=False)
-    for h in range(1, hops + 1):
-        frontier = visited.filter(F.col("hop") == h - 1)
-        if h > 1:
-            frontier = frontier.orderBy(F.desc("score"), F.asc("id")).limit(beam)
-        cand_ids = (
-            edges.join(
-                F.broadcast(frontier.select(F.col("id").alias("src"))), "src"
-            )
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        cand = scored_nodes.join(F.broadcast(cand_ids), "id")
-        visited = visited.unionByName(
-            cand.withColumn("hop", F.lit(h))
-        ).localCheckpoint(eager=False)
-    return visited.drop("hop")
+    A one-row :func:`graph_beam_search_batch`. Returns ``(id_col, score)``
+    best first."""
+    return _best_first(graph_beam_search_batch(
+        graph, df, _one_query(df, query_vector), entry_ids, beam=beam,
+        hops=hops, k=k, id_col=id_col, vector_col=vector_col, metric=metric,
+    ), k, id_col)
 
 
 def upper_layer(
@@ -2568,52 +2693,16 @@ def graph_two_level_search(
     n·m·(1 + 1/level_mult) instead of the flat graph's n·m(n). Every stage
     (hub selection, both walks, the descent top-``n_descend``) is a
     deterministic recurrence (score DESC, id ASC), so the whole two-level
-    pipeline is hop-unrollable and hash-checkable in SQL.
-
-    Measured at 200k×64 (BASELINE.md round-7 table): at EQUAL edge budget
-    the hierarchy matches the flat graph on iid data (recall 0.923 vs
-    0.918) and reaches within 0.06 of the law-degree flat graph at HALF
-    its edges; on a duplicate-heavy corpus it is the difference between
-    working and broken (0.89 vs 0.000-0.004 at ANY flat degree — the
-    hash-sampled upper layer thins clone clusters, so hub entries stay
-    navigable). Returns ``(id_col, score)`` top-k."""
-    m_l = metric.lower()
-    if m_l not in V.SUPPORTED_METRICS:
-        raise ValueError(f"Unknown metric: {metric!r}. Supported: {V.SUPPORTED_METRICS}")
-    qv = V.vector_literal([float(x) for x in query_vector])
-    scored_nodes = df.select(
-        F.col(id_col).alias("id"),
-        V.similarity(m_l, V.as_double(vector_col), qv).alias("score"),
-    )
-    entries = [int(x) for x in upper_entry_ids]
-    if not entries:
-        # Degenerate upper layer (tiny corpus: the ~1/level_mult hash sample
-        # yields an edge-less upper graph whose hub list is empty). Seed the
-        # LOWER walk from the lower graph's own hubs instead of silently
-        # returning zero rows.
-        entries = graph_hub_entries(lower_graph, n_entries=max(1, int(n_descend)))
-        if not entries:
-            # Lower graph edge-less too (single-node / fully-disconnected
-            # corpus): no walk can reach anything, so honour the
-            # never-zero-rows contract with an exact brute-force top-k —
-            # the corpus is degenerate-tiny by construction here.
-            return (
-                scored_nodes.orderBy(F.desc("score"), F.asc("id"))
-                .limit(k)
-                .select(F.col("id").alias(id_col), "score")
-            )
-        # no pre-checkpoint: _beam_visited checkpoints its hop-0 frame
-        seeds = scored_nodes.filter(F.col("id").isin(entries))
-    else:
-        seed_up = scored_nodes.filter(F.col("id").isin(entries))
-        v_up = _beam_visited(scored_nodes, upper_graph, seed_up, beam_up, hops_up)
-        # v_up is ONE checkpointed frame, so the descent cut is a cheap
-        # lazy read — no extra materialization before the lower walk
-        seeds = v_up.orderBy(F.desc("score"), F.asc("id")).limit(int(n_descend))
-    visited = _beam_visited(scored_nodes, lower_graph, seeds, beam, hops)
-    return visited.orderBy(F.desc("score"), F.asc("id")).limit(k).select(
-        F.col("id").alias(id_col), "score"
-    )
+    pipeline is hop-unrollable and hash-checkable in SQL. Measured recall:
+    :class:`TwoLevelGraphIndex`. A one-row
+    :func:`graph_two_level_search_batch`; returns ``(id_col, score)``
+    top-k, best first."""
+    return _best_first(graph_two_level_search_batch(
+        upper_graph, lower_graph, df, _one_query(df, query_vector),
+        upper_entry_ids, beam_up=beam_up, hops_up=hops_up,
+        n_descend=n_descend, beam=beam, hops=hops, k=k, id_col=id_col,
+        vector_col=vector_col, metric=metric,
+    ), k, id_col)
 
 
 def graph_hub_entries(graph: DataFrame, n_entries: int = 4) -> list[int]:
@@ -2645,12 +2734,16 @@ class GraphIndex(PersistedIndex):
       to a rebuild — the top-M merge theorem). The edge list doesn't carry
       the raw vectors, so the build-time corpus fingerprint is the cached
       scalar the append test compares against.
-    - ``query(df, qv)`` — :func:`graph_beam_search` from hub entries
+    - ``query_batch(df, queries)``, and ``query(df, qv)`` as a one-row
+      batch — the walk (:func:`_walk`) from the top hub entries
       (:func:`graph_hub_entries`), walk params defaulting to the measured
-      degree law (:func:`graph_params_for`).
+      degree law (:func:`graph_params_for`). Under the broadcast threshold
+      it is one fused job after the node and edge collects, and its guard
+      reads the indexed size and dim, so it costs no job; above it, SQL
+      hops.
     - ``save``/``load`` — edge-list parquet + JSON sidecar (plane seeds,
       m, metric, indexed size, dim). Loading serves walks straight off the
-      table: each hop is an equi-join against it, no rebuild.
+      table, no rebuild.
     """
 
     SIDECAR = "_graph_index.json"
@@ -2799,41 +2892,20 @@ class GraphIndex(PersistedIndex):
             self._entries = graph_hub_entries(self._frame, n_entries)
         return self._entries
 
-    def query(
-        self,
-        df: DataFrame,
-        query_vector: Sequence[float],
-        k: int = 5,
-        beam: int | None = None,
-        hops: int | None = None,
-        n_entries: int = 4,
-        assume_fresh: bool = False,
-    ) -> DataFrame:
-        if not assume_fresh or self._frame is None:
-            self.ensure(df)
-        p = graph_params_for(self._indexed_rows)
-        walk_entries = self.entries(n_entries)
-        if not walk_entries:
-            # Edge-less graph (single-row corpus): exact brute-force top-k —
-            # the reference's graceful ANN fallback, never zero rows.
-            from . import knn as K
+    def _walk_bytes(self, *layers: "GraphIndex") -> int | None:
+        """Bound on the fused walk's collects (this corpus, ``layers``' edges
+        of out-degree ≤ m + sym_m_rev) from driver state; None if dim unknown."""
+        if self._dim is None or self._indexed_rows < 0:
+            return None
+        return 8 * self._indexed_rows * (1 + self._dim) + sum(
+            16 * max(g._indexed_rows, 0) * (g.m + g.sym_m_rev) for g in layers)
 
-            return K.knn(
-                df, query_vector, k=k, metric=self.metric,
-                vector_col=self.vector_col, id_col=self.id_col,
-            )
-        return graph_beam_search(
-            self._frame,
-            df,
-            query_vector,
-            walk_entries,
-            beam=beam if beam is not None else p["beam"],
-            hops=hops if hops is not None else p["hops"],
-            k=k,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            metric=self.metric,
-        )
+    def query(self, df: DataFrame, query_vector: Sequence[float], k: int = 5,
+              **walk) -> DataFrame:
+        """A one-row :meth:`query_batch` (same walk keywords):
+        ``(id_col, score)`` best first."""
+        return _best_first(self.query_batch(
+            df, _one_query(df, query_vector), k=k, **walk), k, self.id_col)
 
     def query_batch(
         self,
@@ -2847,35 +2919,22 @@ class GraphIndex(PersistedIndex):
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
     ) -> DataFrame:
-        """Batched walk over the cached graph — N queries in ONE plan
-        (:func:`graph_beam_search_batch`), per-query results identical to
-        :meth:`query` (shared recurrence, parity-tested); same freshness
-        contract and edge-less brute fallback."""
+        """N queries walk the cached graph from its top-``n_entries`` hubs
+        (:func:`_walk`); an edge-less graph (single-row corpus) scores
+        every row instead — the reference's graceful ANN fallback, never
+        zero rows."""
         if not assume_fresh or self._frame is None:
             self.ensure(df)
         p = graph_params_for(self._indexed_rows)
-        walk_entries = self.entries(n_entries)
-        if not walk_entries:
-            return K.knn_join(
-                df, queries, k=k, metric=self.metric,
-                vector_col=self.vector_col, id_col=self.id_col,
-                query_vector_col=query_vec_col, query_id_col=query_id_col,
-            ).select(query_id_col, self.id_col, "score")
-        return graph_beam_search_batch(
-            self._frame,
-            df,
-            queries,
-            walk_entries,
-            beam=beam if beam is not None else p["beam"],
-            hops=hops if hops is not None else p["hops"],
-            k=k,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            metric=self.metric,
+        return _walk(
+            df, queries,
+            _Layer(self._frame, n_entries,
+                   beam if beam is not None else p["beam"],
+                   hops if hops is not None else p["hops"], self.entries),
+            k=k, id_col=self.id_col, vector_col=self.vector_col,
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
+            metric=self.metric, nbytes=self._walk_bytes(self),
         )
-
 
 class TwoLevelGraphIndex:
     """Cached two-level (coarse-to-fine) graph index — the HNSW hierarchy
@@ -2889,9 +2948,10 @@ class TwoLevelGraphIndex:
     independently through GraphIndex.ensure (pure append -> one-sided
     fold-in per layer, where the upper delta is ``upper_layer(delta)`` —
     the hash predicate is stable, so a corpus append can only APPEND to
-    the upper layer; content drift -> that layer rebuilds); ``query``
-    walks upper-hub entries -> descent -> short lower walk
-    (:func:`graph_two_level_search`). Serving rationale: BASELINE.md
+    the upper layer; content drift -> that layer rebuilds);
+    ``query_batch`` walks upper-hub entries -> descent -> short lower walk
+    (:func:`_walk`, as :func:`graph_two_level_search_batch`), and
+    ``query`` is its one-row batch. Serving rationale: BASELINE.md
     round-7 table — recall parity with the flat graph at equal edge
     budget on iid data, 0.89-vs-0.000 on the duplicate-heavy clone
     corpus, half the law-degree edge storage."""
@@ -2957,70 +3017,7 @@ class TwoLevelGraphIndex:
         self.upper.ensure(self._upper_df(df))
         return self
 
-    def query(
-        self,
-        df: DataFrame,
-        query_vector: Sequence[float],
-        k: int = 5,
-        beam_up: int | None = None,
-        hops_up: int | None = None,
-        n_descend: int = 4,
-        beam: int | None = None,
-        hops: int | None = None,
-        n_entries: int = 4,
-        assume_fresh: bool = False,
-    ) -> DataFrame:
-        if not assume_fresh or not self.built:
-            self.ensure(df)
-        p_up = graph_params_for(max(2, self.upper._indexed_rows))
-        p_lo = graph_params_for(max(2, self.lower._indexed_rows))
-        upper_entries = self.upper.entries(n_entries)
-        if not upper_entries:
-            # Tiny corpus: the ~1/level_mult upper sample produced an
-            # edge-less graph (no hubs). Serve through the FLAT lower walk
-            # from the lower graph's own hubs with the full hop budget —
-            # never silently return zero rows for a valid query.
-            lower_entries = self.lower.entries(n_entries)
-            if not lower_entries:
-                # Even the lower graph is edge-less (single-row corpus):
-                # exact brute-force top-k, the reference's graceful ANN
-                # fallback (src/vectordb/api.py:152-205 analog).
-                from . import knn as K
-
-                return K.knn(
-                    df, query_vector, k=k, metric=self.metric,
-                    vector_col=self.vector_col, id_col=self.id_col,
-                )
-            return graph_beam_search(
-                self.lower._frame,
-                df,
-                query_vector,
-                lower_entries,
-                beam=beam if beam is not None else p_lo["beam"],
-                hops=hops if hops is not None else p_lo["hops"],
-                k=k,
-                id_col=self.id_col,
-                vector_col=self.vector_col,
-                metric=self.metric,
-            )
-        return graph_two_level_search(
-            self.upper._frame,
-            self.lower._frame,
-            df,
-            query_vector,
-            upper_entries,
-            beam_up=beam_up if beam_up is not None else p_up["beam"],
-            hops_up=hops_up if hops_up is not None else p_up["hops"],
-            n_descend=n_descend,
-            beam=beam if beam is not None else p_lo["beam"],
-            # seeds start NEAR the query, so the lower walk refines with
-            # roughly half the flat walk's hop budget
-            hops=hops if hops is not None else max(2, p_lo["hops"] // 2),
-            k=k,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            metric=self.metric,
-        )
+    query = GraphIndex.query
 
     def query_batch(
         self,
@@ -3037,31 +3034,33 @@ class TwoLevelGraphIndex:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
     ) -> DataFrame:
-        """Batched hierarchical descent — N queries in ONE plan
-        (:func:`graph_two_level_search_batch`, which also owns the
-        degenerate-layer fallbacks); same freshness contract and law-degree
-        walk defaults as :meth:`query`."""
+        """N queries descend the hierarchy (:func:`_walk`): upper walk from
+        the upper top-``n_entries`` hubs, per-query top-``n_descend``
+        descent, lower walk with half the lower hop budget (its seeds start
+        near the query); parameters default to each layer's degree law.
+        Degenerate layers (tiny corpus): an edge-less upper sample walks
+        the FLAT lower layer from its top-``n_entries`` hubs with the full
+        lower hop budget; an edge-less lower graph too scores every row."""
         if not assume_fresh or not self.built:
             self.ensure(df)
         p_up = graph_params_for(max(2, self.upper._indexed_rows))
         p_lo = graph_params_for(max(2, self.lower._indexed_rows))
-        return graph_two_level_search_batch(
-            self.upper._frame,
-            self.lower._frame,
-            df,
-            queries,
-            self.upper.entries(n_entries),
-            beam_up=beam_up if beam_up is not None else p_up["beam"],
-            hops_up=hops_up if hops_up is not None else p_up["hops"],
-            n_descend=n_descend,
-            beam=beam if beam is not None else p_lo["beam"],
-            hops=hops if hops is not None else max(2, p_lo["hops"] // 2),
-            k=k,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
+        return _walk(
+            df, queries,
+            _Layer(self.lower._frame, n_entries,
+                   beam if beam is not None else p_lo["beam"],
+                   hops if hops is not None else p_lo["hops"],
+                   self.lower.entries),
+            _Layer(self.upper._frame, n_entries,
+                   beam_up if beam_up is not None else p_up["beam"],
+                   hops_up if hops_up is not None else p_up["hops"],
+                   self.upper.entries),
+            n_descend,
+            hops if hops is not None else max(2, p_lo["hops"] // 2),
+            k=k, id_col=self.id_col, vector_col=self.vector_col,
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
             metric=self.metric,
+            nbytes=self.lower._walk_bytes(self.lower, self.upper),
         )
 
     # -- disk layout: the two layers' saved dirs plus the meta sidecar,

@@ -632,9 +632,9 @@ def test_knn_graph_incremental_equals_full_rebuild(spark, sf_dir):
     base.unpersist()
 
 
-def test_graph_beam_search_batch_matches_single(spark, sf_dir):
-    """The batched walk is per-query identical to N independent
-    graph_beam_search runs — same recurrence, same tie-breaks."""
+def test_graph_beam_search_batch_matches_single(spark, sf_dir, monkeypatch):
+    """The fused batch walk is per-query identical to N single-query SQL
+    walks (guard pinned off) — same recurrence, same tie-breaks."""
     emb = _emb(spark, sf_dir).limit(300)
     plane_sets = [A.hyperplanes(64, 4, seed=A.LSH_SEED + r) for r in range(2)]
     g = A.knn_graph(emb, plane_sets, m=6).persist()
@@ -646,6 +646,7 @@ def test_graph_beam_search_batch_matches_single(spark, sf_dir):
         g, emb, queries, entry_ids=[0, 5], beam=4, hops=2, k=5
     ).collect():
         batch.setdefault(r.query_id, []).append((r.vec_id, r.score))
+    monkeypatch.setattr(A, "_walk_fits", lambda *a, **kw: False)
     for qid in (0, 1, 2):
         qv = _qv(spark, sf_dir, qid)
         single = [
@@ -848,9 +849,10 @@ def test_two_level_search_descends_to_exact_neighbor(spark, sf_dir):
     lg.unpersist()
 
 
-def test_two_level_batch_matches_single(spark, sf_dir):
-    """Batched two-level descent must reproduce the single-query recurrence
-    exactly per query (same protocol as the knn_join_graph parity test)."""
+def test_two_level_batch_matches_single(spark, sf_dir, monkeypatch):
+    """The fused batched two-level descent must reproduce the single-query
+    SQL recurrence (guard pinned off) exactly per query (same protocol as
+    the knn_join_graph parity test)."""
     e = _emb(spark, sf_dir)
     ps = [A.hyperplanes(64, n_planes=3, seed=A.LSH_SEED + r) for r in range(4)]
     up = A.upper_layer(e, 8)
@@ -868,6 +870,7 @@ def test_two_level_batch_matches_single(spark, sf_dir):
     got = {}
     for r in batch:
         got.setdefault(r.query_id, []).append((r.vec_id, round(r.score, 9)))
+    monkeypatch.setattr(A, "_walk_fits", lambda *a, **kw: False)
     for qid in qids:
         qv = e.filter(F.col("vec_id") == qid).head().embedding
         single = A.graph_two_level_search(
@@ -1030,9 +1033,11 @@ def test_graph_index_single_row_corpus_brute_fallback(spark, sf_dir):
     tl.invalidate()
 
 
-def test_two_level_search_empty_entries_falls_back_to_lower_hubs(spark, sf_dir):
+def test_two_level_search_empty_entries_falls_back_to_lower_hubs(
+        spark, sf_dir, monkeypatch):
     """The functional forms: empty upper_entry_ids seed the lower walk from
-    graph_hub_entries(lower_graph) — single and batch agree."""
+    graph_hub_entries(lower_graph) — the fused single query and the SQL
+    batch (guard pinned off) agree."""
     e = _emb(spark, sf_dir).filter("vec_id < 100")
     ps = [A.hyperplanes(64, n_planes=2, seed=A.LSH_SEED + r) for r in range(2)]
     lg = A.knn_graph(e, ps, m=6).persist()
@@ -1045,6 +1050,7 @@ def test_two_level_search_empty_entries_falls_back_to_lower_hubs(spark, sf_dir):
     queries = spark.createDataFrame(
         [(0, qv)], "query_id bigint, query_vec array<double>"
     )
+    monkeypatch.setattr(A, "_walk_fits", lambda *a, **kw: False)
     batch = A.graph_two_level_search_batch(
         empty_ug, lg, e, queries, [], beam=8, hops=3, k=5, n_descend=4
     ).collect()

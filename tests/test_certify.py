@@ -116,7 +116,8 @@ def test_ivf_search_batch_matches_single_query(spark, sf_dir):
         assert sorted(got[int(q.query_id)]) == want
 
 
-def test_graph_index_query_batch_matches_single(spark, sf_dir):
+def test_graph_index_query_batch_matches_single(spark, sf_dir, monkeypatch):
+    """The fused batch walk matches single-query SQL walks (guard off)."""
     df = _emb(spark, sf_dir).limit(300)
     idx = A.GraphIndex(m=6, n_planes=3).build(df)
     queries = df.filter(F.col("vec_id") % 60 == 0).select(
@@ -129,6 +130,7 @@ def test_graph_index_query_batch_matches_single(spark, sf_dir):
         got.setdefault(int(r.query_id), set()).add(
             (int(r.vec_id), round(float(r.score), 9))
         )
+    monkeypatch.setattr(A, "_walk_fits", lambda *a, **kw: False)
     for q in queries.collect():
         single = {
             (int(r.vec_id), round(float(r.score), 9))

@@ -333,16 +333,19 @@ def test_knn_graph_incremental_one_sided_no_cartesian(spark):
     assert "MapInPandas" in plan
 
 
-def test_knn_join_graph_equi_join_per_hop(spark):
-    """The batched walk's hop expansion is an equi-join on src; the only
+def test_knn_join_graph_equi_join_per_hop(spark, monkeypatch):
+    """The batched SQL walk's hop expansion is an equi-join on src; the only
     non-equi join allowed is the tiny entries×queries seed cross join
     (O(queries · entries) rows by construction). Built with
     checkpoint=False so the full multi-hop lineage is one inspectable
-    plan (the gated query checkpoints per hop)."""
+    plan (the gated query checkpoints per hop). The fused walk's guard is
+    pinned off: the SQL walk is the subject here."""
     from pyspark.sql import functions as F
 
     from educational_vector_database_spark.operators import ann as A
     from educational_vector_database_spark.session import load_table
+
+    monkeypatch.setattr(A, "_walk_fits", lambda *a, **kw: False)
 
     e = load_table(spark, SF, "embeddings")
     planes = A.hyperplanes(64, 4)

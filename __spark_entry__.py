@@ -529,14 +529,18 @@ STREAM_SHUFFLE_TARGET_BYTES = int(os.environ.get(
     "SPARK_GRAFT_STREAM_SHUFFLE_TARGET_BYTES", str(32 * 1024 * 1024)))
 
 
-def _stream_source_bytes(sf_dir: str, table: str) -> int:
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(os.path.join(p, n))
-            for n in os.listdir(p) if n.endswith(".parquet")
-        )
-    return os.path.getsize(p) if os.path.exists(p) else 0
+def _stream_source_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
+    """Bytes of a stream table's parquet files in either layout (see
+    _stream_table), sized through the session's Hadoop FileSystem so that
+    a URI (file://, hdfs://, s3a://) sizes like a local path; 0 if absent."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    p = Path(sf_dir, f"{table}.parquet")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return 0
+    if fs.getFileStatus(p).isDirectory():
+        p = Path(p, "*.parquet")
+    return sum(st.getLen() for st in fs.globStatus(p) if st.isFile())
 
 
 @contextlib.contextmanager
@@ -554,15 +558,18 @@ def _stream_shuffle_scaled(spark: SparkSession, sf_dir: str, *tables: str,
     watermark-advance batch alone cost 5-6 s of pure per-partition state
     churn). Partitions = ceil(source bytes / STREAM_SHUFFLE_TARGET_BYTES),
     clamped to [1, 32 x defaultParallelism] — a 100 TB stream gets
-    thousands of state partitions, a bench-scale file gets few. Restores
+    thousands of state partitions, a bench-scale file gets few; with no
+    source file found the session's own count stays, never 1. Restores
     the session conf afterwards (batch queries keep AQE + the session
     default). Steady-state twins restart from their per-process
     checkpoints, which pin whatever count their setup drain established —
     consistent within a process by construction."""
     par = spark.sparkContext.defaultParallelism
-    total = sum(_stream_source_bytes(sf_dir, t) for t in tables)
-    n = max(floor, min(-(-total // STREAM_SHUFFLE_TARGET_BYTES), 32 * par))
+    total = sum(_stream_source_bytes(spark, sf_dir, t) for t in tables)
     old = spark.conf.get("spark.sql.shuffle.partitions")
+    n = int(old)  # no source file found: size unknown, keep the default
+    if total:
+        n = max(floor, min(-(-total // STREAM_SHUFFLE_TARGET_BYTES), 32 * par))
     spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
     try:
         yield
@@ -7230,31 +7237,27 @@ def _knn_graph_recall_oracle() -> str:
 
 def _knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-index maintenance under gate (≙ reference add_items/
-    resize_index, src/vectordb/ann.py:78-91, for the GRAPH index — the
-    row SURVEY §2 N3 called out of scope until round 6): build the graph
-    on 90% of the corpus, fold the 10% delta in via the ONE-SIDED
-    incremental path (delta×corpus + delta×delta collisions only, merged
-    with existing edges, re-topped). The oracle is the FULL REBUILD on
-    the whole corpus — the gate therefore proves the exactness theorem
-    (top-M(top-M(A) ∪ B) = top-M(A ∪ B)) on real data, not just in the
-    docstring."""
+    resize_index, src/vectordb/ann.py:78-91, for the GRAPH index): build a
+    GraphIndex on 90% of the corpus, then ``ensure`` it against the whole
+    corpus. The 10% pure append rebuilds the graph — GraphIndex has no
+    fold-in, because re-packing the kept corpus to place the delta costs
+    more jobs than the rebuild — so the oracle is the FULL REBUILD on the
+    whole corpus, and the gate checks that the maintained index is exactly
+    that graph."""
     e = _emb(spark, sf_dir)
     corpus = e.filter(F.col("vec_id") % 10 != 0)
-    delta = e.filter(F.col("vec_id") % 10 == 0)
-    base = _track_persist(A.knn_graph(
-        corpus, _GRAPH_PLANE_SETS, m=GRAPH_M
-    ))
-    merged = A.knn_graph_incremental(
-        base, corpus, delta, _GRAPH_PLANE_SETS, m=GRAPH_M
-    )
-    return merged.select(
+    idx = A.GraphIndex(
+        n_plane_sets=GRAPH_R, n_planes=4, m=GRAPH_M, seed=A.LSH_SEED,
+    ).build(corpus).ensure(e)
+    _LIVE_PERSISTS.append(idx._frame)
+    return idx._frame.select(
         "src", "dst",
         F.floor(F.col("score") * F.lit(1e12)).cast("long").alias("score_pico"),
     )
 
 
 def _knn_graph_incremental_oracle() -> str:
-    # the full rebuild IS the oracle: incremental must be bit-identical
+    # the full rebuild IS the oracle: the maintained index must equal it
     return _knn_graph_edges_oracle()
 
 

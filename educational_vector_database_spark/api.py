@@ -239,8 +239,8 @@ class VectorDB:
     def _live_index(self, itype: str):
         """The index serving ``itype``, created on first use and brought up
         to date with the corpus: ensure() embeds the reference's lazy
-        contract — the SEARCH pays the rebuild or the exact append fold-in
-        (ref api.py:42-62), never the write."""
+        contract — the SEARCH pays the rebuild, or for IVF and IVF-PQ the
+        append fold-in (ref api.py:42-62), never the write."""
         cls = INDEXES[itype][0]
         if type(self._index) is not cls:
             kw = {"n_cells": self._n_cells} if itype in ("ivf", "ivfpq") else {}

@@ -945,18 +945,24 @@ class PersistedIndex:
     list or the PQ code table — plus driver-side state: the indexed row
     count, the build-time (id, vector) :func:`corpus_fingerprint` and, once
     loaded, the path its frame reads. Subclasses supply ``build`` (which
-    ends in :meth:`_install`), :meth:`_fold_in`, the queries and their own
-    sidecar fields; everything below is shared:
+    ends in :meth:`_install`), the queries, their own sidecar fields and,
+    optionally, ``_fold_in(kept, delta)`` — the frame after appending
+    ``delta`` to the indexed ``kept`` rows. A class folds exactly when it
+    defines ``_fold_in``: IVF and IVF-PQ do (the delta is assigned to the
+    frozen centroids, so the cost tracks the delta); the graph does not (a
+    graph fold-in re-packs the whole kept corpus and costs more jobs than
+    a rebuild). Everything below is shared:
 
     - ``ensure(df)`` — fresh (same row count) -> no-op; a PURE APPEND
       (every indexed id still present with unchanged content, only new ids
-      added) -> :meth:`_fold_in` the delta, O(|delta|); any other drift ->
-      ``build``. The append test is one aggregate over the corpus tagged
-      with the indexed ids: kept-side count, kept-side fingerprint and
-      delta fingerprint together. The kept side is compared against the
-      cached build-time fingerprint, so an in-place vector update combined
-      with an append cannot pass as a pure append. Contract bound (same as
-      the reference's size-only check, src/vectordb/api.py:63-79): a
+      added) to a folding class -> ``_fold_in`` the delta; any other drift,
+      and every drift of a class without ``_fold_in``, -> ``build``. The
+      append test is one aggregate over the corpus tagged with the indexed
+      ids: kept-side count, kept-side fingerprint and delta fingerprint
+      together. The kept side is compared against the cached build-time
+      fingerprint, so an in-place vector update combined with an append
+      cannot pass as a pure append. Contract bound (same as the
+      reference's size-only check, src/vectordb/api.py:63-79): a
       count-preserving in-place rewrite with NO appends is not detected —
       call :meth:`invalidate` after one. All of it is paid by the SEARCH
       path, keeping writes zero-job.
@@ -987,16 +993,6 @@ class PersistedIndex:
         self._mutated = False
 
     # -- hooks ----------------------------------------------------------------
-
-    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
-        """The frame after appending ``delta`` to the indexed ``kept`` rows."""
-        raise NotImplementedError
-
-    def _can_fold(self) -> bool:
-        return True
-
-    def _indexed_ids(self) -> DataFrame:
-        return self._frame.select(self.id_col)
 
     def _table(self) -> DataFrame:
         """The frame as written by :meth:`save`."""
@@ -1059,11 +1055,13 @@ class PersistedIndex:
         n = df.count()
         if n == self._indexed_rows:
             return self
+        if not hasattr(self, "_fold_in"):
+            return self.build(df)
         fp = self._corpus_fp
         if fp is None and self.FRAME_HAS_VECTORS:
             fp = self._census(self._frame)[1]  # sidecar predates corpus_fp
-        if self._can_fold() and fp is not None:
-            ids = self._indexed_ids()
+        if fp is not None:
+            ids = self._frame.select(self.id_col)
             r = (
                 df.join(ids.withColumn("_kept", F.lit(True)), self.id_col,
                         "left")
@@ -2000,82 +1998,6 @@ def graph_params_for(n_rows: int) -> dict:
     }
 
 
-def knn_graph_incremental(
-    graph: DataFrame,
-    corpus: DataFrame,
-    new: DataFrame,
-    planes: Sequence,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    metric: str = "cosine",
-    blocks_per_bucket: int | None = None,
-    row_cap: int = 4096,
-) -> DataFrame:
-    """One-sided graph-index maintenance — the graph-specific analog of the
-    reference's ``add_items``/``resize_index`` (src/vectordb/ann.py:78-91:
-    HNSW grows in place, inserts never force a rebuild; SURVEY §2 N3 noted
-    the graph-shaped resize as out of scope until now): candidate pairs are
-    generated ONLY for delta×corpus and delta×delta collisions (the
-    one-sided band-join discipline of minhash_dedup_incremental), merged
-    with the EXISTING edge list, and re-topped per node.
-
-    EXACT, not approximate: for a corpus node the full-rebuild candidate
-    set is collisions(corpus) ∪ collisions(delta), and under the total
-    order (score DESC, dst ASC) top-M(top-M(A) ∪ B) = top-M(A ∪ B) — any
-    candidate the old graph dropped was dominated by M retained edges. So
-    the incremental result is bit-identical to :func:`knn_graph` over
-    corpus ∪ delta (the gated oracle IS the full rebuild), at
-    O(|delta| · bucket-density) cost instead of O(corpus²/buckets). The
-    caller contract: ``graph`` must be the knn_graph of ``corpus`` under
-    the SAME plane sets / m / metric."""
-    m_l = _metric(metric)
-
-    def _packed(df: DataFrame) -> DataFrame:
-        return _salted_pack(_lsh_keyed(df, planes, id_col, vector_col),
-                            ["r", "bkt"], blocks_per_bucket, row_cap)
-
-    delta_p, corp_p = _packed(new), _packed(corpus)
-    # delta×corpus: every block combo within (r, bkt), both directions
-    # (corpus nodes need their delta candidates too); same=False always —
-    # the two sides are disjoint id sets, no self pairs to mask
-    cross = (
-        delta_p.alias("a")
-        .join(
-            corp_p.alias("b"),
-            (F.col("a.r") == F.col("b.r")) & (F.col("a.bkt") == F.col("b.bkt")),
-        )
-        .select(
-            F.lit(False).alias("same"),
-            F.col("a.rows").alias("rows_a"),
-            F.col("b.rows").alias("rows_b"),
-        )
-    )
-    # delta×delta: the standard half-matrix
-    self_pairs = (
-        delta_p.alias("a")
-        .join(
-            delta_p.alias("b"),
-            (F.col("a.r") == F.col("b.r"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.blk") <= F.col("b.blk")),
-        )
-        .select(
-            (F.col("a.blk") == F.col("b.blk")).alias("same"),
-            F.col("a.rows").alias("rows_a"),
-            F.col("b.rows").alias("rows_b"),
-        )
-    )
-    cand = cross.unionByName(self_pairs).mapInPandas(
-        _make_block_topm_kernel(m_l, m), "src long, dst long, score double"
-    )
-    # existing edges are already (src, dst)-distinct; union them below the
-    # shared single-Exchange dedup+top-m tail
-    return _topm_edges(
-        cand.unionByName(graph.select("src", "dst", "score")), m
-    )
-
-
 class _Layer(NamedTuple):
     """One walk layer: edge list, entries (ids, or ``n`` for the graph's
     top-``n`` hubs), beam, hops, and an optional cached hub lookup."""
@@ -2730,10 +2652,11 @@ class GraphIndex(PersistedIndex):
     ann.py:78-91 resize+add):
 
     - ``build(df)`` — :func:`knn_graph` over the corpus, persisted.
-    - pure-append fold-in — :func:`knn_graph_incremental` (bit-identical
-      to a rebuild — the top-M merge theorem). The edge list doesn't carry
-      the raw vectors, so the build-time corpus fingerprint is the cached
-      scalar the append test compares against.
+    - ``ensure(df)`` — any size drift, a pure append included, rebuilds
+      through ``build``: the class defines no ``_fold_in``. Unlike HNSW's
+      in-place ``add_items``, a graph fold-in here must re-pack the whole
+      kept corpus to find the delta's neighbours, so it costs more jobs
+      than the rebuild it would equal.
     - ``query_batch(df, queries)``, and ``query(df, qv)`` as a one-row
       batch — the walk (:func:`_walk`) from the top hub entries
       (:func:`graph_hub_entries`), walk params defaulting to the measured
@@ -2786,21 +2709,11 @@ class GraphIndex(PersistedIndex):
         self.build_waves = build_waves
         self.build_dir = build_dir
         # NN-descent rounds applied after each BUILD (knn_graph_refine —
-        # the round-9 recall lever at 2M+). The pure-append fold-in path
-        # stays refine-free BY DESIGN: its bit-equal-to-rebuild theorem
-        # assumes old edges are the LSH candidates' top-M; refined edges
-        # are a superset-quality graph, so after a fold-in the graph stays
-        # monotone-good but is not bit-equal to a refined rebuild — callers
-        # wanting that invariant rebuild (the gated incremental row pins
-        # refine_rounds=0).
+        # the round-9 recall lever at 2M+).
         self.refine_rounds = int(refine_rounds)
         self.refine_expand = int(refine_expand)
         # Degree-capped bidirectional links applied after each BUILD
         # (symmetrize_edges — HNSW's reverse-link insertion in batch form).
-        # Like refine_rounds, this voids the fold-in bit-equal theorem —
-        # worse, re-topping a symmetrized union to m would DROP reverse
-        # edges — so with sym_m_rev > 0 any size drift rebuilds (_can_fold;
-        # HNSW-analog maintenance is amortized-rebuild here).
         self.sym_m_rev = int(sym_m_rev)
         self._entries: list[int] | None = None
         self._dim: int | None = None
@@ -2854,26 +2767,6 @@ class GraphIndex(PersistedIndex):
         for p in inters:
             p.unpersist()
         return self
-
-    def _can_fold(self) -> bool:
-        return self.sym_m_rev == 0
-
-    def _indexed_ids(self) -> DataFrame:
-        return self._frame.select(F.col("src").alias(self.id_col)).distinct()
-
-    def _fold_in(self, kept: DataFrame, delta: DataFrame) -> DataFrame:
-        return knn_graph_incremental(
-            self._frame,
-            kept,
-            delta,
-            self._plane_sets(self._infer_dim(delta)),
-            m=self.m,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            metric=self.metric,
-            blocks_per_bucket=self.blocks_per_bucket,
-            row_cap=self.row_cap,
-        )
 
     def _swap(self, new: DataFrame, materialize=DataFrame.count):
         self._entries = None  # hub entries belong to the old edge list
@@ -2945,10 +2838,9 @@ class TwoLevelGraphIndex:
     md5-hash sample (~1/level_mult of the rows — upper nodes ARE corpus
     nodes, exactly hnswlib's membership rule). Lifecycle verbs mirror the
     reference's lazy orchestration: ``ensure`` reconciles EACH layer
-    independently through GraphIndex.ensure (pure append -> one-sided
-    fold-in per layer, where the upper delta is ``upper_layer(delta)`` —
-    the hash predicate is stable, so a corpus append can only APPEND to
-    the upper layer; content drift -> that layer rebuilds);
+    independently through GraphIndex.ensure (one count per layer; a layer
+    whose size drifted rebuilds — the upper layer only when the drift
+    reached its ``upper_layer`` sample);
     ``query_batch`` walks upper-hub entries -> descent -> short lower walk
     (:func:`_walk`, as :func:`graph_two_level_search_batch`), and
     ``query`` is its one-row batch. Serving rationale: BASELINE.md
@@ -3090,9 +2982,13 @@ class TwoLevelGraphIndex:
         """Same contract as :meth:`PersistedIndex.save`, for both layers."""
         if not self.built:
             raise ValueError("index not built; call build()/ensure() first")
-        over = self._reads(path)
-        if over and not (self.lower._mutated or self.upper._mutated):
+        # skip only when BOTH layers already are their saved form: a pure
+        # append can rebuild one layer (it then reads no file) and leave
+        # the other attached to ``path``
+        if all(layer._reads(p) and not layer._mutated
+               for layer, p in self._layers(path)):
             return self
+        over = self._reads(path)
         swap_dir(path, self._write)
         if over:
             self._attach(self.lower._frame.sparkSession, path)

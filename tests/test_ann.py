@@ -610,28 +610,6 @@ def test_vectordb_load_corrupt_ivf_sidecar(spark, tmp_path):
     assert got[0].vec_id == 0
 
 
-def test_knn_graph_incremental_equals_full_rebuild(spark, sf_dir):
-    """The maintenance theorem on real data: one-sided delta fold-in is
-    BIT-identical to the full rebuild (top-M(top-M(A) u B) = top-M(A u B))."""
-    emb = _emb(spark, sf_dir).limit(240)
-    plane_sets = [A.hyperplanes(64, 4, seed=A.LSH_SEED + r) for r in range(2)]
-    corpus = emb.filter(F.col("vec_id") % 4 != 0)
-    delta = emb.filter(F.col("vec_id") % 4 == 0)
-    base = A.knn_graph(corpus, plane_sets, m=5).persist()
-    merged = {
-        (r.src, r.dst): r.score
-        for r in A.knn_graph_incremental(
-            base, corpus, delta, plane_sets, m=5
-        ).collect()
-    }
-    full = {
-        (r.src, r.dst): r.score
-        for r in A.knn_graph(emb, plane_sets, m=5).collect()
-    }
-    assert merged == full  # exact float equality, same kernel fold order
-    base.unpersist()
-
-
 def test_graph_beam_search_batch_matches_single(spark, sf_dir, monkeypatch):
     """The fused batch walk is per-query identical to N single-query SQL
     walks (guard pinned off) — same recurrence, same tie-breaks."""
@@ -674,20 +652,23 @@ def test_graph_params_degree_law():
     assert p2m["m"] == 128  # two more decades -> two more doublings
 
 
-def test_graph_index_lifecycle(spark, sf_dir, tmp_path):
-    """GraphIndex orchestration: build -> pure-append ensure folds in via
-    the incremental path and equals a fresh rebuild; save/load roundtrips
-    losslessly; query returns best-first results off the loaded table."""
+@pytest.mark.parametrize("refine_rounds", [0, 1])
+def test_graph_index_lifecycle(spark, sf_dir, tmp_path, refine_rounds):
+    """GraphIndex orchestration: build -> a pure-append ensure rebuilds and
+    equals a fresh build, refined or not; save/load roundtrips losslessly;
+    query returns best-first results off the loaded table."""
     emb = _emb(spark, sf_dir).limit(200)
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
-    idx = A.GraphIndex(n_plane_sets=2, m=5).build(corpus)
+    idx = A.GraphIndex(n_plane_sets=2, m=5,
+                       refine_rounds=refine_rounds).build(corpus)
     n0 = idx._indexed_rows
     assert not idx.is_stale(corpus)
-    # pure append -> incremental fold-in, bit-identical to a rebuild
+    # pure append -> the same graph a fresh build of the grown corpus gives
     idx.ensure(emb)
     assert idx._indexed_rows == emb.count() > n0
     got = {(r.src, r.dst): r.score for r in idx._frame.collect()}
-    fresh = A.GraphIndex(n_plane_sets=2, m=5).build(emb)
+    fresh = A.GraphIndex(n_plane_sets=2, m=5,
+                         refine_rounds=refine_rounds).build(emb)
     want = {(r.src, r.dst): r.score for r in fresh._frame.collect()}
     assert got == want
     # hub entries are deterministic and part of the saved/loaded contract
@@ -709,8 +690,8 @@ def test_graph_index_lifecycle(spark, sf_dir, tmp_path):
 
 
 def test_graph_index_ensure_rebuilds_on_drift(spark, sf_dir):
-    """Non-append drift (an indexed id removed) forces a full rebuild, not
-    the incremental path."""
+    """Non-append drift (an indexed id removed) rebuilds the graph over
+    the remaining rows."""
     emb = _emb(spark, sf_dir).limit(150)
     idx = A.GraphIndex(n_plane_sets=2, m=4).build(emb)
     drifted = emb.filter(F.col("vec_id") % 7 != 0)  # deletions
@@ -885,10 +866,9 @@ def test_two_level_batch_matches_single(spark, sf_dir, monkeypatch):
 
 
 def test_two_level_index_lifecycle(spark, sf_dir, tmp_path):
-    """TwoLevelGraphIndex: build both layers; pure append folds into BOTH
-    (upper delta = hash-sampled slice of the corpus delta, bit-equal to a
-    fresh build); update+append forces rebuild via the per-layer content
-    fingerprints; save/load roundtrips losslessly."""
+    """TwoLevelGraphIndex: build both layers; a pure append rebuilds each
+    layer whose size drifted, edge-equal to a fresh build; save/load
+    roundtrips losslessly."""
     e = _emb(spark, sf_dir)
     base = e.filter("vec_id < 300")
     idx = A.TwoLevelGraphIndex(
@@ -896,7 +876,7 @@ def test_two_level_index_lifecycle(spark, sf_dir, tmp_path):
     ).build(base)
     assert idx.lower._indexed_rows == 300
     assert idx.upper._indexed_rows == A.upper_layer(base, 4).count()
-    # pure append folds both layers, bit-equal to fresh builds
+    # pure append rebuilds both layers, equal to fresh builds
     idx.ensure(e)
     fresh = A.TwoLevelGraphIndex(
         level_mult=4, m_lower=6, m_upper=6, n_plane_sets=2, n_planes=3
@@ -904,7 +884,7 @@ def test_two_level_index_lifecycle(spark, sf_dir, tmp_path):
     for layer in ("lower", "upper"):
         got = {(r.src, r.dst) for r in getattr(idx, layer)._frame.collect()}
         want = {(r.src, r.dst) for r in getattr(fresh, layer)._frame.collect()}
-        assert got == want, f"{layer} fold-in != fresh build"
+        assert got == want, f"{layer} after append != fresh build"
     # save/load roundtrip: identical walk result
     path = str(tmp_path / "tl_idx")
     idx.save(path)
@@ -1473,9 +1453,8 @@ def test_two_level_index_refine_rounds_build_and_sidecar(
 def test_graph_index_sym_m_rev_build_and_sidecar(spark, sf_dir, tmp_path):
     """GraphIndex(sym_m_rev=K) must build symmetrize_edges(knn_graph(df))
     exactly (the composable operators are the contract), the sidecar must
-    round-trip the knob, and ensure() on a pure append must REBUILD (the
-    fold-in theorem is void once reverse edges exist: re-topping the
-    symmetrized union to m would drop them)."""
+    round-trip the knob, and ensure() on a pure append must rebuild the
+    symmetrized graph of the grown corpus."""
     e = _emb(spark, sf_dir).limit(80)
     idx = A.GraphIndex(m=6, n_planes=3, sym_m_rev=4)
     idx.build(e)
@@ -1491,8 +1470,7 @@ def test_graph_index_sym_m_rev_build_and_sidecar(spark, sf_dir, tmp_path):
     back = A.GraphIndex.load(spark, p)
     assert back.sym_m_rev == 4
     assert back._frame.count() == len(want)
-    # pure append: sym graph must rebuild (NOT fold in) — the rebuilt
-    # edge set equals symmetrize(knn_graph(full)) exactly
+    # pure append: the rebuilt edge set equals symmetrize(knn_graph(full))
     full = _emb(spark, sf_dir).limit(100)
     idx.ensure(full)
     got2 = {(int(r.src), int(r.dst)) for r in idx._frame.collect()}

@@ -93,10 +93,15 @@ def _folded(idx) -> bool:
     return (idx.lower if isinstance(idx, A.TwoLevelGraphIndex) else idx)._mutated
 
 
+# the indexes that fold a pure append in; a graph layer rebuilds
+FOLDS = {"ivf", "ivfpq"}
+
+
 @pytest.mark.parametrize("kind", sorted(MAKERS))
 def test_index_save_over_its_source(spark, tmp_path, kind):
-    """load(p) -> save(p) keeps every row, unmutated and after a
-    pure-append fold-in, and the reloaded index serves the appended rows."""
+    """load(p) -> save(p) keeps every row, unmutated and after a pure
+    append (folded in, or rebuilt for a graph), and the reloaded index
+    serves the appended rows."""
     base, _, grown = _frames(spark)
     cls = type(MAKERS[kind]())
     path = str(tmp_path / kind)
@@ -107,7 +112,7 @@ def test_index_save_over_its_source(spark, tmp_path, kind):
     assert not cls.load(spark, path).is_stale(base)
 
     loaded.ensure(grown)
-    assert _folded(loaded)
+    assert _folded(loaded) == (kind in FOLDS)
     loaded.save(path)
     assert not os.path.exists(path + ".stage")
     assert not os.path.exists(path + ".old")
@@ -116,6 +121,31 @@ def test_index_save_over_its_source(spark, tmp_path, kind):
     qv = _rows(N_NEW, start=10_000, seed=4)[2][1]
     got = back.query(grown, qv, k=3, assume_fresh=True).collect()
     assert 10_002 in {r.vec_id for r in got}
+
+
+def test_two_level_save_over_its_source_after_a_lower_only_append(
+        spark, tmp_path):
+    """An append whose rows all miss the upper sample rebuilds the lower
+    layer only; save(p) over the loaded source must still write it, though
+    the upper layer still reads p."""
+    base = _frames(spark)[0]
+    path = str(tmp_path / "two_level")
+    A.TwoLevelGraphIndex(level_mult=4).build(base).save(path).invalidate()
+    cand = _rows(16, start=20_000, seed=5)
+    upper = {r.vec_id for r in A.upper_layer(
+        spark.createDataFrame(cand, SCHEMA), 4).select("vec_id").collect()}
+    new = [r for r in cand if r[0] not in upper]
+    assert new
+    grown = base.unionByName(spark.createDataFrame(new, SCHEMA))
+
+    loaded = A.TwoLevelGraphIndex.load(spark, path)
+    loaded.ensure(grown)
+    assert loaded.upper._reads(os.path.join(path, "_upper"))  # not rebuilt
+    loaded.save(path)
+    back = A.TwoLevelGraphIndex.load(spark, path)
+    assert not back.is_stale(grown)
+    got = back.query(grown, new[0][1], k=1, assume_fresh=True).collect()
+    assert [r.vec_id for r in got] == [new[0][0]]
 
 
 @pytest.mark.parametrize("itype", sorted(INDEXES))
@@ -140,7 +170,8 @@ def test_vectordb_save_over_loaded_store(spark, tmp_path, saved_db, itype):
 def test_legacy_sidecars_load_and_fold_in(spark, tmp_path, saved_db, itype):
     """Sidecars carrying exactly the key sets written before the shared
     base (the IVF one has no corpus_fp) still load, and a pure append
-    still folds in rather than rebuilding or crashing."""
+    still folds in (IVF, IVF-PQ) or rebuilds (graph layers) rather than
+    crashing."""
     new = _frames(spark)[1]
     path = saved_db(itype, str(tmp_path / "db"))
     rewritten = set()
@@ -164,7 +195,37 @@ def test_legacy_sidecars_load_and_fold_in(spark, tmp_path, saved_db, itype):
     db2.add_vectors(new)
     qv = _rows(N_NEW, start=10_000, seed=4)[2][1]
     assert 10_002 in {r.vec_id for r in db2.search_vector(qv, k=3).collect()}
-    assert _folded(db2._index)
+    assert _folded(db2._index) == (itype in FOLDS)
+
+
+def test_graph_append_costs_a_count_per_layer_plus_a_build(spark):
+    """A pure append to a two-level graph index launches no more jobs than
+    a fresh build of the grown corpus plus one count per layer: no census
+    of kept and delta rows, no re-pack of the kept corpus."""
+    spark.catalog.clearCache()  # no other test's cached frames serve this one
+    base, _, grown = _frames(spark)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        start = dag.nextJobId()
+        fn()
+        return dag.nextJobId() - start
+
+    # A build of a corpus whose edge frames are cached reads them and
+    # launches fewer jobs. So the cache starts empty, and the fresh build
+    # runs first and is released.
+    def make():
+        return A.TwoLevelGraphIndex(level_mult=4)
+
+    fresh = make()
+    n_build = jobs(lambda: fresh.build(grown))
+    fresh.invalidate()
+    idx = make().build(base)
+    n_upper = idx.upper._indexed_rows
+    n_append = jobs(lambda: idx.ensure(grown))
+    assert idx.upper._indexed_rows > n_upper  # both layers drifted
+    assert n_append <= n_build + 2, (n_append, n_build)
+    idx.invalidate()
 
 
 def test_rebalance_does_not_rescan_source(spark):

@@ -324,15 +324,6 @@ def test_knn_graph_edges_bucket_keyed_no_cartesian(spark):
     assert len(re.findall(r"Exchange", tree[: tree.index("MapInPandas")])) == 1
 
 
-def test_knn_graph_incremental_one_sided_no_cartesian(spark):
-    """Graph maintenance joins delta blocks against corpus blocks on the
-    (set, bucket) key only — the corpus never self-joins."""
-    plan = _plan(spark, "knn_graph_incremental")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "MapInPandas" in plan
-
-
 def test_knn_join_graph_equi_join_per_hop(spark, monkeypatch):
     """The batched SQL walk's hop expansion is an equi-join on src; the only
     non-equi join allowed is the tiny entries×queries seed cross join

@@ -212,7 +212,7 @@ def test_save_load_carries_built_ivf_index(spark, tmp_path):
 
 def test_vectordb_graph_index_search_and_roundtrip(spark, tmp_path):
     """index_type="graph": searches route through the GraphIndex beam walk
-    (lazy-built on first search, exact fold-in on pure appends), and
+    (lazy-built on first search, rebuilt when the corpus grows), and
     save/load persists the edge list under <store>/_graph_index so the
     reloaded DB serves walks without a rebuild."""
     import numpy as np
@@ -357,8 +357,8 @@ def test_index_type_survives_save_load(spark, tmp_path):
 
 def test_vectordb_two_level_index_serving_and_roundtrip(spark, tmp_path):
     """index_type="two_level": searches serve through the coarse-to-fine
-    hierarchy (both layers lazily built on first search, appends fold in
-    per layer), save() persists the two-layer index under
+    hierarchy (both layers lazily built on first search, a layer whose
+    size drifted rebuilt), save() persists the two-layer index under
     _two_level_index, and load() reattaches it with identical results."""
     from educational_vector_database_spark.api import VectorDB
 

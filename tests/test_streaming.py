@@ -224,3 +224,36 @@ def test_stream_sessionize_matches_batch_closed_sessions(spark, sf_dir):
         .collect()
     }
     assert streamed == batch_closed
+
+
+def test_stream_partitions_sized_the_same_through_a_uri(spark, sf_dir,
+                                                         tmp_path, monkeypatch):
+    """The stateful drains size their shuffle partitions from the source
+    bytes. A URI to the same files (here file://; hdfs:// and s3a:// go the
+    same Hadoop FileSystem route) must size like the plain path, in both
+    table layouts; with no source file found the session's own count
+    stays, never 1."""
+    import shutil
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(entry, "STREAM_SHUFFLE_TARGET_BYTES", 1024)
+
+    def parts(d, *tables):
+        with entry._stream_shuffle_scaled(spark, d, *tables):
+            return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    part_dir = tmp_path / "parts" / "events.parquet"  # directory layout
+    part_dir.mkdir(parents=True)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"),
+                part_dir / "part-00000.parquet")
+    (part_dir / "_SUCCESS").write_text("")
+
+    plain = parts(sf_dir, "events", "documents")
+    assert plain > 1
+    assert parts("file://" + sf_dir, "events", "documents") == plain
+    one = parts(sf_dir, "events")
+    assert parts(str(tmp_path / "parts"), "events") == one
+    assert parts((tmp_path / "parts").as_uri(), "events") == one
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts(str(tmp_path / "absent"), "events") == default

@@ -514,12 +514,24 @@ def _stream_table(
     sf1 sweep caught the directory case silently streaming ZERO files
     under the old name-glob-only form — an empty delta, not an error."""
     p = os.path.join(sf_dir, f"{table}.parquet")
+    _, _, is_dir = _table_path(spark, sf_dir, table)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if os.path.isdir(p):
+    if is_dir:
         return reader.option("pathGlobFilter", "*.parquet").parquet(p)
     return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+
+
+def _table_path(spark: SparkSession, sf_dir: str, table: str):
+    """``(path, fs, is_dir)``: the Hadoop Path of ``<table>.parquet`` under
+    ``sf_dir``, its FileSystem, and whether it is a directory of part files
+    (False for a file or an absent path). Asked of the session's Hadoop
+    FileSystem, not os.path, so that a URI (file://, hdfs://, s3a://)
+    answers like a local path."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(sf_dir, f"{table}.parquet")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return p, fs, fs.exists(p) and fs.getFileStatus(p).isDirectory()
 
 
 #: Target bytes of stream-source input per stateful shuffle partition.
@@ -533,14 +545,10 @@ def _stream_source_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Bytes of a stream table's parquet files in either layout (see
     _stream_table), sized through the session's Hadoop FileSystem so that
     a URI (file://, hdfs://, s3a://) sizes like a local path; 0 if absent."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    p = Path(sf_dir, f"{table}.parquet")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
-    if fs.getFileStatus(p).isDirectory():
-        p = Path(p, "*.parquet")
-    return sum(st.getLen() for st in fs.globStatus(p) if st.isFile())
+    p, fs, is_dir = _table_path(spark, sf_dir, table)
+    if is_dir:
+        p = spark._jvm.org.apache.hadoop.fs.Path(p, "*.parquet")
+    return sum(st.getLen() for st in fs.globStatus(p) or [] if st.isFile())
 
 
 @contextlib.contextmanager
@@ -9223,9 +9231,9 @@ def _search_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     the piece a retrieval pipeline adds when near-duplicate passages
     crowd the context window (the reference returns raw similarity
     order, reference src/vectordb/rag.py:74-97). The greedy recurrence
-    unrolls into k declarative join+argmax stages over queries × pool
-    rows (the graph walk's hop-unroll precedent) — no driver loop, no
-    Python kernel, bit-exact against the identically-unrolled oracle."""
+    folds over one pooled row per query: k projections of higher-order
+    expressions with a running-max penalty — no driver loop, no Python
+    kernel, bit-exact against the oracle's unrolled join stages."""
     from educational_vector_database_spark.operators import mmr as M
 
     e = _emb(spark, sf_dir)

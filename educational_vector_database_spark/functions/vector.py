@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Division-by-zero guard used by the reference's normalizer (index.py:7).
@@ -137,6 +137,16 @@ def vector_literal(values) -> Column:
     if vals and all(math.isfinite(v) for v in vals):
         return F.expr(sql_array_double(vals))
     return F.array(*[F.lit(v) for v in vals])
+
+
+def query_frame(spark: SparkSession, query_vector) -> DataFrame:
+    """A single query vector as a one-row, one-partition ``(query_id,
+    query_vec)`` frame of literals (query_id 0): no Python-side rows for a
+    worker to deserialize, as a ``createDataFrame`` row frame would have."""
+    return spark.range(0, 1, 1, 1).select(
+        F.lit(0).cast("long").alias("query_id"),
+        vector_literal(query_vector).alias("query_vec"),
+    )
 
 
 # --- SQL-fragment builders (single-parse expression construction) -----------

@@ -2515,15 +2515,6 @@ def graph_two_level_search_batch(
     )
 
 
-def _one_query(df: DataFrame, query_vector: Sequence[float]) -> DataFrame:
-    """A single query vector as a one-row, one-partition query frame of
-    literals — no Python-side rows for a worker to deserialize."""
-    return df.sparkSession.range(0, 1, 1, 1).select(
-        F.lit(0).cast("long").alias("query_id"),
-        V.vector_literal(query_vector).alias("query_vec"),
-    )
-
-
 def _best_first(batch: DataFrame, k: int, id_col: str) -> DataFrame:
     """A one-query batch result as ``(id_col, score)``, best first."""
     return batch.orderBy(F.desc("score"), F.asc(id_col)).limit(k).select(
@@ -2556,8 +2547,9 @@ def graph_beam_search(
     A one-row :func:`graph_beam_search_batch`. Returns ``(id_col, score)``
     best first."""
     return _best_first(graph_beam_search_batch(
-        graph, df, _one_query(df, query_vector), entry_ids, beam=beam,
-        hops=hops, k=k, id_col=id_col, vector_col=vector_col, metric=metric,
+        graph, df, V.query_frame(df.sparkSession, query_vector), entry_ids,
+        beam=beam, hops=hops, k=k, id_col=id_col, vector_col=vector_col,
+        metric=metric,
     ), k, id_col)
 
 
@@ -2620,7 +2612,7 @@ def graph_two_level_search(
     :func:`graph_two_level_search_batch`; returns ``(id_col, score)``
     top-k, best first."""
     return _best_first(graph_two_level_search_batch(
-        upper_graph, lower_graph, df, _one_query(df, query_vector),
+        upper_graph, lower_graph, df, V.query_frame(df.sparkSession, query_vector),
         upper_entry_ids, beam_up=beam_up, hops_up=hops_up,
         n_descend=n_descend, beam=beam, hops=hops, k=k, id_col=id_col,
         vector_col=vector_col, metric=metric,
@@ -2798,7 +2790,8 @@ class GraphIndex(PersistedIndex):
         """A one-row :meth:`query_batch` (same walk keywords):
         ``(id_col, score)`` best first."""
         return _best_first(self.query_batch(
-            df, _one_query(df, query_vector), k=k, **walk), k, self.id_col)
+            df, V.query_frame(df.sparkSession, query_vector), k=k, **walk),
+            k, self.id_col)
 
     def query_batch(
         self,

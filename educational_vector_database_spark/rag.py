@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from .embeddings import Embeddings
 from .functions import text as T
+from .functions import vector as V
 from .operators import knn as K
 
 ANSWER_PREFIX = "This is a placeholder answer. Relevant context:\n"  # rag.py:87-90
@@ -221,13 +222,10 @@ def retrieve_diverse(
     mmr_score)`` in selection order."""
     from .operators import mmr as M
 
-    qdf = chunks.sparkSession.createDataFrame(
-        [(0, [float(x) for x in query_vector])],
-        "query_id BIGINT, query_vec ARRAY<DOUBLE>",
-    )
     sel = M.mmr_rerank_join(
-        chunks, qdf, k=k, lam=lam, pool=pool, metric=metric,
-        id_col="chunk_id", vector_col="embedding",
+        chunks, V.query_frame(chunks.sparkSession, query_vector), k=k,
+        lam=lam, pool=pool, metric=metric, id_col="chunk_id",
+        vector_col="embedding",
     )
     return (
         sel.join(chunks.select("chunk_id", "chunk"), "chunk_id")

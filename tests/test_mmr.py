@@ -132,3 +132,30 @@ def test_mmr_candidates_passthrough(spark, sf_dir):
     rows = M.mmr_rerank_join(e, queries, k=3, candidates=shortlist).collect()
     assert {r.vec_id for r in rows} <= {7, 11, 13, 17, 19}
     assert len(rows) == 3
+
+
+def _jobs(spark, fn):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - start
+
+
+def test_mmr_jobs_flat_in_k(spark, sf_dir):
+    """The k greedy steps fold over one pooled row per query, so the job
+    count does not grow with k: k=3 launches at most 4 jobs (the unrolled
+    selection launched 28 here), and k=6 as many as k=3. The cache is cleared first: a plan-equal candidate frame cached
+    elsewhere would lower the count."""
+    spark.catalog.clearCache()
+    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    queries = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+    def run(k):
+        return _jobs(
+            spark, lambda: M.mmr_rerank_join(e, queries, k=k, pool=20).collect())
+
+    k3 = run(3)
+    assert k3 <= 4
+    assert run(6) == k3

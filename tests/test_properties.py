@@ -5,7 +5,7 @@ through the similarity kernels. The reference has no property testing
 
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from educational_vector_database_spark.functions import text as T
@@ -276,9 +276,9 @@ def test_graph_beam_search_matches_reference_walker(
 )
 @settings(**SETTINGS)
 def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, k, pool):
-    """The k unrolled declarative MMR stages equal the sequential greedy
-    recurrence (lam*rel - (1-lam)*max-sim-to-picked, ties score DESC id
-    ASC) on arbitrary vector sets — the connected_components-vs-union-find
+    """The k-step MMR fold equals the sequential greedy recurrence
+    (lam*rel - (1-lam)*max-sim-to-picked, ties score DESC id ASC) on
+    arbitrary vector sets — the connected_components-vs-union-find
     pattern for the diversity rerank."""
     from educational_vector_database_spark.operators import mmr as M
 
@@ -295,30 +295,120 @@ def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, k, pool):
         (r.rank, r.vec_id, r.mmr_score)
         for r in M.mmr_rerank_join(corpus, queries, k=k, lam=0.5, pool=pool).collect()
     )
+    assert got == _brute_greedy_mmr(vecs, qv, k, 0.5, pool, "cosine")
 
-    def cos(a, b):
-        dot = na = nb = 0.0
-        for x, y in zip(a, b):
-            dot += x * y
-            na += x * x
-            nb += y * y
-        return dot / (math.sqrt(na) * math.sqrt(nb))
 
-    rel = {i: cos(v, qv) for i, v in enumerate(vecs)}
-    cand = sorted(rel, key=lambda i: (-rel[i], i))[:pool]
-    picked, want = [], []
+def _mmr_sim(metric, a, b):
+    """functions/vector.py's similarity, folded left to right in Python."""
+    def fold(u, w, f):
+        acc = 0.0
+        for x, y in zip(u, w):
+            acc += f(x, y)
+        return acc
+
+    def mul(x, y):
+        return x * y
+
+    if metric == "dot":
+        return fold(a, b, mul)
+    if metric == "euclidean":
+        return 1.0 / (1.0 + math.sqrt(fold(a, b, lambda x, y: (x - y) * (x - y))))
+    den = math.sqrt(fold(a, a, mul)) * math.sqrt(fold(b, b, mul))
+    return fold(a, b, mul) / den if den != 0.0 else 0.0
+
+
+def _greedy_mmr(cand, k, lam, metric):
+    """Sequential MMR over ``cand`` rows ``(id, vec, rel)``: a pick removes
+    every row with its id, a null id never matches (so it stays a
+    candidate), ties break score DESC then id ASC with null first."""
+    picked, out = [], []
     for t in range(1, k + 1):
+        taken = {p for p, _ in picked if p is not None}
         best = None
-        for c in cand:
-            if c in picked:
+        for cid, v, rel in cand:
+            if cid in taken:
                 continue
-            pen = max((cos(vecs[c], vecs[s]) for s in picked), default=0.0)
-            sc = 0.5 * rel[c] - 0.5 * pen
-            if best is None or (-sc, c) < best[0]:
-                best = ((-sc, c), sc)
-        picked.append(best[0][1])
-        want.append((t, best[0][1], best[1]))
-    assert got == sorted(want)
+            pen = max((_mmr_sim(metric, v, pv) for _, pv in picked), default=0.0)
+            sc = lam * rel - (1.0 - lam) * pen
+            key = (-sc, cid is not None, cid or 0)
+            if best is None or key < best[0]:
+                best = (key, cid, v, sc)
+        if best is None:
+            break
+        picked.append((best[1], best[2]))
+        out.append((t, best[1], best[3]))
+    return out
+
+
+def _brute_greedy_mmr(vecs, qv, k, lam, pool, metric):
+    """The greedy over the top-``pool`` rows by relevance to ``qv`` (ties
+    by id); row ids are positions in ``vecs``."""
+    rel = [_mmr_sim(metric, v, qv) for v in vecs]
+    top = sorted(range(len(vecs)), key=lambda i: (-rel[i], i))[:pool]
+    return _greedy_mmr([(i, vecs[i], rel[i]) for i in top], k, lam, metric)
+
+
+mmr_coord = st.sampled_from([-1.0, 0.0, 0.0, 0.5, 2.0])
+mmr_vec = st.lists(mmr_coord, min_size=3, max_size=3)  # zero vectors likely
+
+
+@st.composite
+def mmr_cases(draw):
+    """A corpus and query, or a caller shortlist over the corpus vectors
+    with repeated ids, tied relevances and at most one null id."""
+    vecs = draw(st.lists(mmr_vec, min_size=1, max_size=6))
+    ids = st.integers(min_value=0, max_value=len(vecs) - 1)
+    rels = st.sampled_from([0.25, 0.5, 0.5, 1.0])
+    shortlist = draw(st.none() | st.lists(st.tuples(ids, rels), min_size=1, max_size=8))
+    if shortlist is not None:
+        null_row = draw(st.none() | st.tuples(ids, rels))
+        shortlist = [(i, vecs[i], r) for i, r in shortlist]
+        if null_row is not None:
+            shortlist.append((None, vecs[null_row[0]], null_row[1]))
+    return (vecs, draw(mmr_vec), shortlist,
+            draw(st.sampled_from(["cosine", "dot", "euclidean"])),
+            draw(st.sampled_from([0.5, 0.7])),
+            draw(st.integers(min_value=1, max_value=5)),
+            draw(st.integers(min_value=1, max_value=4)))
+
+
+@given(mmr_cases())
+@example((
+    [[0.0, 0.0, 0.0], [1.0, 0.0, 0.0], [2.0, 0.0, 0.0], [0.0, 0.5, 0.0]],
+    [1.0, 0.0, 0.0],
+    [(0, [0.0, 0.0, 0.0], 0.5), (1, [1.0, 0.0, 0.0], 0.5),
+     (1, [1.0, 0.0, 0.0], 1.0), (3, [0.0, 0.5, 0.0], 0.5),
+     (None, [2.0, 0.0, 0.0], 1.0)],
+    "cosine", 0.5, 5, 2))
+@example(([[0.0, 0.0, 0.0], [1.0, 0.0, 0.0], [2.0, 0.0, 0.0]], [0.5, 0.5, 0.0],
+          None, "dot", 0.7, 4, 2))
+@settings(**SETTINGS)
+def test_mmr_fold_edge_cases_equal_sequential_greedy(spark, case):
+    """The fold against the sequential greedy on the cases a join-free
+    selection could get wrong: a ``candidates=`` shortlist with repeated
+    ids, tied relevances, zero vectors and a null id; ``pool < k`` (the
+    picks stop when the pool runs out); and the dot and euclidean
+    metrics. Rows compare with ``==``, scores included."""
+    from educational_vector_database_spark.operators import mmr as M
+
+    vecs, qv, shortlist, metric, lam, k, pool = case
+    corpus = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id: long, embedding: array<double>")
+    queries = V.query_frame(spark, qv)
+    cand = None
+    if shortlist is not None:
+        cand = spark.createDataFrame(
+            [(0, i, v, r) for i, v, r in shortlist],
+            "query_id: long, vec_id: long, embedding: array<double>, rel: double")
+        want = _greedy_mmr(shortlist, k, lam, metric)
+    else:
+        want = _brute_greedy_mmr(vecs, qv, k, lam, pool, metric)
+    got = sorted(
+        ((r.rank, r.vec_id, r.mmr_score) for r in M.mmr_rerank_join(
+            corpus, queries, k=k, lam=lam, pool=pool, metric=metric,
+            candidates=cand).collect()),
+        key=lambda t: t[0])
+    assert got == want
 
 
 token_docs = st.lists(

@@ -226,6 +226,34 @@ def test_stream_sessionize_matches_batch_closed_sessions(spark, sf_dir):
     assert streamed == batch_closed
 
 
+def test_stream_table_reads_part_files_through_a_uri(spark, sf_dir, tmp_path):
+    """A table stored as a directory of part files streams every row
+    whether the sf dir is a plain path or a URI (here file://; hdfs:// and
+    s3a:// go the same Hadoop FileSystem route). A layout test through
+    os.path reads a URI as absent and takes the single-file name glob,
+    which streams zero rows with no error."""
+    import shutil
+
+    import __spark_entry__ as entry
+
+    part_dir = tmp_path / "parts" / "events.parquet"
+    part_dir.mkdir(parents=True)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"),
+                part_dir / "part-00000.parquet")
+    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+
+    def drain(d, name):
+        q = (entry._stream_table(spark, d, "events", schema).writeStream
+             .format("memory").queryName(name)
+             .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return spark.table(name).count()
+
+    assert drain(str(tmp_path / "parts"), "parts_plain") == 1000
+    assert drain((tmp_path / "parts").as_uri(), "parts_uri") == 1000
+
+
 def test_stream_partitions_sized_the_same_through_a_uri(spark, sf_dir,
                                                          tmp_path, monkeypatch):
     """The stateful drains size their shuffle partitions from the source

@@ -111,8 +111,8 @@ HEADER = """# Physical plans (generated by tools/dump_plans.py at sf0.01)
 | `knn_join_hamming` | query side broadcasts with scan-side-encoded codes; pair distance is one popcount; per-query shortlist = WindowGroupLimit; rerank reads ~shortlist vector rows (plan-asserted) | OK |
 | `knn_bq_asym` | shortlist by the 64-term per-bit conditional chain (codes only, TakeOrderedAndProject) → left-semi → exact rerank; same scan bytes as Hamming, recall 0.875 vs 0.615 | OK |
 | `knn_ivf_hamming` | probed-cells filter before the popcount shortlist — candidates are nprobe/n_cells of the corpus at 8 B/row; exact rerank of shortlist rows | OK |
-| `search_mmr_diverse` | broadcast queries×corpus relevance seed, then k unrolled stages of broadcast anti/equi join + groupBy(max) + window argmax over queries×pool rows — no cartesian (plan-asserted) | OK |
-| `rag_context_diverse` | the MMR stages over the chunk+embed pipeline; context collapsed via array_sort-inside-collect_list (selection-rank order, shuffle-safe) | OK |
+| `search_mmr_diverse` | broadcast queries×corpus relevance seed (the only join) + per-query top-pool window, ONE groupBy(query) collect_list of the pool, then the k greedy steps as projections of higher-order functions over that row and one posexplode — no selection join, no Union, no cartesian (plan-asserted) | OK |
+| `rag_context_diverse` | the MMR fold over the chunk+embed pipeline; context collapsed via array_sort-inside-collect_list (selection-rank order, shuffle-safe) | OK |
 | `search_bm25` | one token scan; tf filtered to the query's terms BEFORE aggregation (never vocabulary-sized); |Q|-row df broadcasts; integer DIV per (doc, term) | OK |
 | `search_hybrid_bm25` | BM25 leg + vector leg, each TakeOrdered top-50; fusion join is 50×50 on doc_id; micro-int rank arithmetic | OK |
 | `search_doc_maxsim` | chunk scoring scan-side; per-doc window picks the arg-best chunk; TakeOrdered tail | OK |
